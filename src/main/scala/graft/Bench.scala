@@ -379,8 +379,8 @@ object Bench {
     val sf1Enabled =
       if (only.isEmpty) !sys.env.get("SPARK_GRAFT_SF1").contains("0")
       else sys.env.get("SPARK_GRAFT_SF1").contains("1")
-    val (sf1Json, sf1Compact) =
-      if (!sf1Enabled) ("null", "null")
+    val (sf1Json, sf1Compact): (String, Either[String, BenchTail.Sf1Summary]) =
+      if (!sf1Enabled) ("null", Left("null"))
       else try {
         val copies = 10
         val dst = "/tmp/graft_bench_sf1"
@@ -536,20 +536,15 @@ object Bench {
         val ratios = verdicts.flatMap { case (k, v) =>
           BenchBaseline.sf1MinSec.get(k).map(b => (k, v.sec / b, v.quiet))
         }
-        val aboveBarJson = ratios
-          .filter(_._2 > 2.0)
-          .map { case (k, r, q) => "\"" + k + "\":" + f"""{"ratio":$r%.2f,"quiet":$q}""" }
-          .mkString("{", ",", "}")
         val maxRatio = ratios.map(_._2).maxOption.getOrElse(0.0)
-        val compactSf1 =
-          f"""{"n":${known.size},"measured":${verdicts.size},"skipped":$skipJson,"failed":$failJson,"unknown":$unknownJson,"requeued":$requeuedJson,"above_bar":$aboveBarJson,"max_ratio":$maxRatio%.2f}"""
-        (full, compactSf1)
+        (full, Right(BenchTail.Sf1Summary(known.size, verdicts.size, skipped.sorted, sf1Failed.sorted,
+          unknown.sorted, sf1Requeued.sorted, ratios.filter(_._2 > 2.0), maxRatio)))
       } catch {
         // the sf1 gate must never take the round artifact down with it
         // (replica generation can hit disk limits a normal run never sees)
         case e: Throwable =>
           System.err.println(s"[bench sf1] gate failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          ("\"gate_failed\"", "\"gate_failed\"")
+          ("\"gate_failed\"", Left("\"gate_failed\""))
       }
     val json =
       s"""{"metric":"$metricName","value":$total,"unit":"sec","queries":$qs,"queries_norm":$qsNorm,"canary":$canaryJson,"canary_pair":$canaryPairJson,"drift":${f"$preRequeueDrift%.3f"},"requeue":$requeueJson,"above_bar_quiet":$aboveJson,"failed":$failedJson,"runs_per_query":$Runs,"agg":"min","sf":"$sfDir","sf1_subset":$sf1Json$onlyJson}"""
@@ -566,8 +561,7 @@ object Bench {
     // loud lists, above-bar ratios) and is printed LAST — total first in
     // the line, whole line well under the window; per-query detail stays
     // in the full line and in bench_out.json (committed with the repo).
-    val requeueUnsettled = requeued.toSeq.collect { case (k, (_, _, false)) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val requeueUnsettled = requeued.toSeq.collect { case (k, (_, _, false)) => k }.sorted
     // Per-FAMILY subtotals + the N heaviest per-query seconds in the FINAL
     // line (VERDICT r17 item 1): the driver keeps only a ~2000-char stdout
     // tail, so the full 283-entry "queries" map (~6 KB, in the full line
@@ -586,9 +580,12 @@ object Bench {
     val topJson = perQuery.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
       .mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"$metricName","value":$total,"unit":"sec","n_queries":${summary.count(_._2.isDefined)},"canary":$canaryJson,"canary_pair":$canaryPairJson,"drift":${f"$preRequeueDrift%.3f"},"requeue_n":${requeued.size},"requeue_unsettled":$requeueUnsettled,"above_bar_quiet":$aboveJson,"failed":$failedJson,"families":$famJson,"top_queries":$topJson,"sf":"$sfDir","sf1_subset":$sf1Compact,"queries_in":"bench_out.json"}"""
-    println(compact)
+    // variable-size lists are cut so the whole line stays under the
+    // tail window: see BenchTail
+    val compactHead =
+      s""""metric":"$metricName","value":$total,"unit":"sec","n_queries":${summary.count(_._2.isDefined)},"canary":$canaryJson,"canary_pair":$canaryPairJson,"drift":${f"$preRequeueDrift%.3f"},"requeue_n":${requeued.size}"""
+    println(BenchTail.line(compactHead, requeueUnsettled, aboveBarQuiet.sorted, failed.sorted, famJson, topJson,
+      sfDir, sf1Compact))
     spark.stop()
   }
 }

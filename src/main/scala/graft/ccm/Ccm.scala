@@ -92,14 +92,10 @@ object Ccm {
     // convergence subquery would make Spark execute the whole skill subtree
     // twice; the window keeps it a single pass.
     val wd = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    sk.withColumn("slope_raw", regr_slope($"rho", $"lib_size".cast("double")).over(wd))
+    val perRow = sk
+      .withColumn("slope_raw", regr_slope($"rho", $"lib_size".cast("double")).over(wd))
       .withColumn("n_sizes", count(lit(1)).over(wd))
-      .withColumn(
-        "convergent",
-        $"n_sizes" >= 3 && $"slope_raw".isNotNull && !isnan($"slope_raw") && $"slope_raw" > 0.001
-      )
-      .withColumn("slope", coalesce($"slope_raw", lit(0.0)))
-      .drop("slope_raw", "n_sizes")
+    CcmPipeline.withConvergence(perRow, "slope_raw", "n_sizes").drop("slope_raw", "n_sizes")
   }
 
   /** Scale path: one shuffle to co-locate each series, then the local kernel.

@@ -12,15 +12,18 @@ import org.apache.spark.sql.functions._
   * reproducible as ANSI SQL for the DuckDB oracle:
   *
   *  - time-delay embedding  (`lib/ccm.ex:99-107`)  = `lead` window
+  *    ([[Knn.embed]])
   *  - library sampling      (`lib/ccm.ex:117,121`) = deterministic
   *    hash-rank split ([[DetHash]]); rank depends only on (series, sample,
   *    idx), so one ranking is **reused across the whole lib-size ladder**
   *    (the reference recomputes from scratch per (libSize, sample))
   *  - brute-force kNN       (`lib/ccm.ex:151-160`) = equi-join on the
   *    (series, sample) cell + top-k window (Spark >= 3.5 rewrites
-  *    `row_number <= k` to a per-partition TopK via WindowGroupLimit)
+  *    `row_number <= k` to a per-partition TopK via WindowGroupLimit);
+  *    the distance is [[Knn.distance]]
   *  - weights + prediction  (`lib/ccm.ex:142-177,246-262`) = partition-min
-  *    analytic + weighted-average aggregate
+  *    analytic + weighted-average aggregate ([[Knn.withWeights]]); the
+  *    leave-one-out EDM modules share the same primitive ([[Knn]])
   *  - skill                 (`lib/ccm.ex:187-213`) = `corr` aggregate
   *  - convergence           (`lib/ccm.ex:215-244`) = `regr_slope` aggregate
   *
@@ -49,16 +52,8 @@ object CcmPipeline {
       e: Int,
       tau: Int
   ): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    val pointCols = (0 until e).map { j =>
-      (if (j == 0) source else lead(source, j * tau).over(w)).as(s"e$j")
-    }
-    val tgt =
-      (if ((e - 1) * tau == 0) target else lead(target, (e - 1) * tau).over(w)).as("tgt")
-    df.select(
-        keys.map(col) ++ Seq((row_number().over(w) - 1).cast("long").as("idx")) ++
-          pointCols :+ tgt: _*
-      )
+    Knn
+      .embed(df, keys, order, source, e, tau, Seq(("tgt", target, (e - 1) * tau)))
       .filter(col(s"e${e - 1}").isNotNull) // rows past n-(E-1)tau have no full point
   }
 
@@ -241,11 +236,7 @@ object CcmPipeline {
       .reduce(_ && _) && $"q.sample_id" === $"l.sample_id" &&
       $"l.rank" < $"q.rank" && $"l.rank" <= lit(maxLib.toLong)
     val dims = 0 until e
-    val distExpr = sqrt(
-      dims
-        .map(j => (col(s"q.e$j") - col(s"l.e$j")) * (col(s"q.e$j") - col(s"l.e$j")))
-        .reduce(_ + _)
-    )
+    val distExpr = Knn.distance("q", "l", e)
     def pairSelect(joined: DataFrame): DataFrame =
       joined.select(
         (keys.map(kn => col(s"q.$kn").as(kn)) ++ Seq(
@@ -440,22 +431,14 @@ object CcmPipeline {
       .withColumn("nn_rank", row_number().over(wNN))
       .filter($"nn_rank" <= kLimit)
 
-    // weights (`lib/ccm.ex:246-262`) + weighted prediction (`ccm.ex:168-175`).
-    // graft_exp is the codegen'd IEEE-only exp series (ExactMath.exp) —
-    // bit-identical to the oracle's ExactExp.duck tree by construction,
-    // retiring the libm class waiver on the engine's hottest kernel.
-    val wMin = Window.partitionBy((cellKeys :+ col("pred_idx")): _*)
-    val weighted = nn
-      .withColumn("min_dist", min($"dist").over(wMin))
-      .withColumn(
-        "w",
-        when($"dist" < 1e-12, 1.0).otherwise(expr("graft_exp((- dist) / (min_dist + 1e-8D))"))
-      )
+    // weights (`lib/ccm.ex:246-262`, [[Knn.withWeights]]) + weighted
+    // prediction (`ccm.ex:168-175`).
+    val weighted = Knn.withWeights(nn, cellKeys :+ $"pred_idx")
     if (!orderFreeFold)
       weighted
         .groupBy((cellKeys ++ Seq(col("pred_idx"), col("actual"))): _*)
         .agg(sum($"w").as("sw"), sum($"w" * $"lib_tgt").as("swt"))
-        .withColumn("predicted", when($"sw" === 0.0, 0.0).otherwise($"swt" / $"sw"))
+        .withColumn("predicted", Knn.predicted($"sw", $"swt"))
         .drop("sw", "swt")
     else
       // ORDER-FREE publication fold (round 15, closing the float ledger
@@ -562,16 +545,25 @@ object CcmPipeline {
   def convergence(skillDf: DataFrame, keys: Seq[String]): DataFrame = {
     val spark = skillDf.sparkSession
     import spark.implicits._
-    skillDf
+    val grouped = skillDf
       .groupBy(keys.map(col): _*)
       .agg(
         regr_slope($"rho", $"lib_size".cast("double")).as("slope"),
         count(lit(1)).as("n_sizes")
       )
-      .withColumn(
-        "convergent",
-        $"n_sizes" >= 3 && $"slope".isNotNull && !isnan($"slope") && $"slope" > 0.001
-      )
-      .withColumn("slope", coalesce($"slope", lit(0.0)))
+    withConvergence(grouped, "slope", "n_sizes")
+  }
+
+  /** The convergence flag and reported slope from a per-series OLS slope
+    * column and lib-size count column: `convergent` = at least 3 lib sizes
+    * and a non-null, non-NaN slope strictly > 0.001 (`lib/ccm.ex:215-244`);
+    * `slope` = the raw slope with null → 0.0. The one definition both
+    * [[convergence]] (groupBy form) and [[Ccm.bidirectional]] (window form)
+    * use.
+    */
+  def withConvergence(df: DataFrame, slope: String, nSizes: String): DataFrame = {
+    val s = col(slope)
+    df.withColumn("convergent", col(nSizes) >= 3 && s.isNotNull && !isnan(s) && s > 0.001)
+      .withColumn("slope", coalesce(s, lit(0.0)))
   }
 }

@@ -1,7 +1,6 @@
 package graft.ccm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** False-Nearest-Neighbor (FNN) embedding-dimension estimation.
@@ -12,8 +11,8 @@ import org.apache.spark.sql.functions._
   * extension (SURVEY.md §2c.2), Kennel et al. 1992 criterion:
   *
   *  - embed at dimension E and find each point's nearest neighbor in the
-  *    E-dimensional manifold (brute-force pair join + top-1 window — the
-  *    same kNN machinery as cross-mapping);
+  *    E-dimensional manifold (the leave-one-out top-1 of
+  *    [[Knn.neighbors]] — the same kNN primitive as cross-mapping);
   *  - the neighbor is FALSE if the extra coordinate revealed at dimension
   *    E+1 jumps relative to the E-dim distance:
   *    |x_{i+E*tau} − x_{j+E*tau}| / d_E(i,j) > rTol;
@@ -41,47 +40,20 @@ object FnnDim {
       rTol: Double = 15.0
   ): DataFrame = {
     val k = keys.map(col)
-    val w = Window.partitionBy(k: _*).orderBy(order: _*)
     // dims 0..maxE: embedding coordinates for E=maxE, plus the (E+1)-th
     // coordinate needed by the false-neighbor test of E=maxE
-    val leadCols = (0 to maxE).map { j =>
-      (if (j == 0) value else lead(value, j * tau).over(w)).as(s"e$j")
-    }
     // localCheckpoint: the embedded relation feeds BOTH sides of maxE
     // self-joins — without materialization Spark re-executes the scan +
     // window 2*maxE times (the same self-join trap the dedup signature
     // relations document); at cluster scale the equivalent is persisting
     // the embedding table once
-    val emb = df
-      .select(k ++ Seq((row_number().over(w) - 1).cast("long").as("idx")) ++ leadCols: _*)
-      .localCheckpoint()
+    val emb = Knn.embed(df, keys, order, value, maxE + 1, tau).localCheckpoint()
 
-    val spark = df.sparkSession
     val perE = (1 to maxE).map { e =>
       // rows that have the e-dim point AND the extra coordinate e{e}
       val rows = emb.filter(col(s"e$e").isNotNull)
-      val joinCond = keys.map(kn => col(s"a.$kn") === col(s"b.$kn")).reduce(_ && _) &&
-        col("a.idx") =!= col("b.idx")
-      val dist2 = (0 until e)
-        .map(j => (col(s"a.e$j") - col(s"b.e$j")) * (col(s"a.e$j") - col(s"b.e$j")))
-        .reduce(_ + _)
-      val pairs = rows
-        .as("a")
-        .join(rows.as("b"), joinCond)
-        .select(
-          (keys.map(kn => col(s"a.$kn").as(kn)) ++ Seq(
-            col("a.idx").as("idx"),
-            col("b.idx").as("nn_idx"),
-            sqrt(dist2).as("dist"),
-            abs(col(s"a.e$e") - col(s"b.e$e")).as("extra_gap")
-          )): _*
-        )
-      val wNN = Window
-        .partitionBy((k :+ col("idx")): _*)
-        .orderBy(col("dist").asc, col("nn_idx").asc)
-      pairs
-        .withColumn("rn", row_number().over(wNN))
-        .filter(col("rn") === 1)
+      Knn
+        .neighbors(rows, keys, e, 1, Seq(abs(col(s"q.e$e") - col(s"l.e$e")).as("extra_gap")))
         .select(
           (k :+ lit(e).as("e") :+
             // zero-distance twins are never false; Kennel ratio otherwise

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   *
   * Library is leave-one-out (every other embedding row of the series);
   * k = E+1 neighbors by (distance, idx); weights are the reference's
-  * exact-hit/stabilizer formula (`lib/ccm.ex:246-262`). Directions follow
+  * exact-hit/stabilizer formula (`lib/ccm.ex:246-262`) — all three from
+  * the shared [[Knn]] primitive. Directions follow
   * the CCM convention: x_causes_y embeds Y, predicts X.
   *
   * Scale: one pair join per series (the series-id partition axis), lag
@@ -54,7 +55,6 @@ object LagCcm {
   ): DataFrame = {
     require(lags.nonEmpty, "lags must be non-empty")
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark) // graft_exp weight kernel
     import spark.implicits._
     val base =
       df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
@@ -62,40 +62,15 @@ object LagCcm {
     val lagDf = broadcast(lags.toDF("lag").select(col("lag").cast("long").as("lag")))
 
     def oneDir(src: Column, tgt: Column, dir: String): DataFrame = {
-      val emb = CcmPipeline.embedded(base, Seq("skey"), ord, src, tgt, e, tau)
-      val dims = (0 until e).map(j => s"e$j")
-      // localCheckpoint: rel feeds FOUR join sides (pair t/l, shifted
-      // library targets, shifted actuals) — without materialization each
+      // rel = (skey, idx, e0..e{E-1}, tgt). localCheckpoint: rel feeds
+      // FOUR join sides (pair q/l, shifted library targets, shifted
+      // actuals) — without materialization each
       // reference re-runs the capped scan + index/embedding windows
       // (8 scans per query, visible as duplicated WindowGroupLimit
       // subtrees in CcmFanoutPlanSpec's plan); at cluster scale this is
       // the persisted embedding table every EDM stage shares
-      val rel = emb
-        .select((Seq(col("skey"), col("idx")) ++ dims.map(col) :+ col("tgt")): _*)
-        .localCheckpoint()
-      val d2 = dims
-        .map(dn => (col(s"t.$dn") - col(s"l.$dn")) * (col(s"t.$dn") - col(s"l.$dn")))
-        .reduceLeft(_ + _)
-      val pairs = rel
-        .as("t")
-        .join(rel.as("l"), $"t.skey" === $"l.skey" && $"t.idx" =!= $"l.idx")
-        .select(
-          $"t.skey".as("skey"),
-          $"t.idx".as("t_idx"),
-          $"l.idx".as("l_idx"),
-          sqrt(d2).as("dist")
-        )
-      val wNN = Window.partitionBy("skey", "t_idx").orderBy($"dist".asc, $"l_idx".asc)
-      val wMin = Window.partitionBy("skey", "t_idx")
-      val nn = pairs
-        .withColumn("rn", row_number().over(wNN))
-        .filter($"rn" <= e + 1)
-        .withColumn("min_dist", min($"dist").over(wMin))
-        .withColumn(
-          "w",
-          when($"dist" < 1e-12, 1.0).otherwise(expr("graft_exp((- dist) / (min_dist + 1e-8D))"))
-        )
-        .select($"skey", $"t_idx", $"l_idx", $"w")
+      val rel = CcmPipeline.embedded(base, Seq("skey"), ord, src, tgt, e, tau).localCheckpoint()
+      val nn = Knn.weighted(rel, Seq("skey"), e, e + 1).select($"skey", $"q_idx", $"l_idx", $"w")
       // lag fan-out on the k-row neighbor relation; shifted targets come
       // from the embedded relation itself via (skey, idx + lag)
       val libT = rel.select($"skey".as("lskey"), $"idx".as("li"), $"tgt".as("lt"))
@@ -103,28 +78,14 @@ object LagCcm {
       val fanned = nn.crossJoin(lagDf)
       val summed = fanned
         .join(libT, fanned("skey") === libT("lskey") && fanned("l_idx") + fanned("lag") === libT("li"))
-        .groupBy($"skey", $"lag", $"t_idx")
+        .groupBy($"skey", $"lag", $"q_idx")
         .agg(sum($"w").as("sw"), sum($"w" * $"lt").as("swt"))
       val preds = summed
-        .join(actT, summed("skey") === actT("askey") && summed("t_idx") + summed("lag") === actT("ai"))
-        .withColumn("pred", when($"sw" === 0.0, 0.0).otherwise($"swt" / $"sw"))
-      preds
-        .groupBy($"skey", $"lag")
-        .agg(
-          covar_samp($"act", $"pred").as("cv"),
-          stddev_samp($"act").as("s1"),
-          stddev_samp($"pred").as("s2")
-        )
-        .withColumn(
-          "rho",
-          when(
-            $"cv".isNull || $"s1".isNull || $"s2".isNull ||
-              isnan($"cv") || isnan($"s1") || isnan($"s2") ||
-              $"s1" === 0.0 || $"s2" === 0.0,
-            0.0
-          ).otherwise($"cv" / ($"s1" * $"s2"))
-        )
-        .select($"skey", lit(dir).as("direction"), $"lag", (round($"rho", 6) + lit(0.0)).as("rho"))
+        .join(actT, summed("skey") === actT("askey") && summed("q_idx") + summed("lag") === actT("ai"))
+        .withColumn("pred", Knn.predicted($"sw", $"swt"))
+      Knn
+        .guardedRho(preds.groupBy($"skey", $"lag"), $"act", $"pred")
+        .select($"skey", lit(dir).as("direction"), $"lag", $"rho")
     }
 
     val u = oneDir($"y", $"x", Ccm.DirXCausesY).unionByName(oneDir($"x", $"y", Ccm.DirYCausesX))

@@ -18,11 +18,10 @@ import org.apache.spark.sql.functions._
   *  - lag columns: ONE window pass computes every lag 0..maxLag;
   *  - views: a |views|-way union of projections over the checkpointed
   *    lagged relation (each view picks its coordinate pair);
-  *  - kNN: the same self-join + windowed top-k as the main pipeline,
-  *    leave-one-out library (all points except the query row itself),
-  *    deterministic (dist, idx) tie-break;
-  *  - weights/prediction: C8 semantics verbatim (exp(-d/dmin),
-  *    exact-hit override, zero-weight guard);
+  *  - kNN + weights/prediction: the shared [[Knn]] primitive with
+  *    `view` added to the keys — leave-one-out library (all points except
+  *    the query row itself), deterministic (dist, idx) tie-break, C8
+  *    weights (exp(-d/dmin), exact-hit override, zero-weight guard);
   *  - view ranking: per-series row_number over (rho DESC, view id) on
   *    6-dp-ROUNDED rhos (the ccm_lag_sweep precedent: raw-double
   *    ordering could flip a near-tie between engines);
@@ -66,7 +65,6 @@ object Multiview {
       k: Int = 3,
       topViews: Int = 3
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(series.sparkSession) // graft_exp weight kernel
     val w = Window.partitionBy("skey").orderBy(order.map(col): _*)
     val maxLag = lags.max
     val lagged = series
@@ -85,49 +83,21 @@ object Multiview {
           col("skey"),
           lit(vid).as("view"),
           col("idx"),
-          col(s"ly$l1").as("c0"),
-          col(s"ly$l2").as("c1"),
+          col(s"ly$l1").as("e0"),
+          col(s"ly$l2").as("e1"),
           col("x")
         )
       }
       .reduce(_ unionByName _)
-    val pairs = emb
-      .as("q")
-      .join(
-        emb.as("l"),
-        col("q.skey") === col("l.skey") && col("q.view") === col("l.view") &&
-          col("q.idx") =!= col("l.idx")
-      )
-      .select(
-        col("q.skey").as("skey"),
-        col("q.view").as("view"),
-        col("q.idx").as("q_idx"),
-        col("q.x").as("actual"),
-        col("l.idx").as("l_idx"),
-        col("l.x").as("lib_x"),
-        sqrt(
-          (col("q.c0") - col("l.c0")) * (col("q.c0") - col("l.c0")) +
-            (col("q.c1") - col("l.c1")) * (col("q.c1") - col("l.c1"))
-        ).as("dist")
-      )
-    val wq = Window.partitionBy("skey", "view", "q_idx")
-    val knn = pairs
-      .withColumn("rk", row_number().over(wq.orderBy(col("dist").asc, col("l_idx").asc)))
-      .filter(col("rk") <= k)
-    val weighted = knn
-      .withColumn("dmin", min(col("dist")).over(wq))
-      .withColumn(
-        "wt",
-        when(col("dist") < 1e-12, 1.0).otherwise(expr("graft_exp((- dist) / (dmin + 1e-8D))"))
-      )
-    val preds = weighted
+    val preds = Knn
+      .weighted(emb, Seq("skey", "view"), 2, k, Seq(col("q.x").as("actual"), col("l.x").as("lib_x")))
       .groupBy("skey", "view", "q_idx")
       .agg(
         first(col("actual")).as("actual"),
-        sum(col("wt")).as("sw"),
-        sum(col("wt") * col("lib_x")).as("swx")
+        sum(col("w")).as("sw"),
+        sum(col("w") * col("lib_x")).as("swx")
       )
-      .withColumn("pred", when(col("sw") === 0.0, 0.0).otherwise(col("swx") / col("sw")))
+      .withColumn("pred", Knn.predicted(col("sw"), col("swx")))
       .localCheckpoint() // consumed by the view ranking AND the mv average
     val viewSkill = preds
       .groupBy("skey", "view")

@@ -1,7 +1,6 @@
 package graft.ccm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Simplex projection — leave-one-out kNN forecasting (Sugihara & May 1990,
@@ -27,10 +26,10 @@ import org.apache.spark.sql.functions._
   *    horizon tp at fixed E gives the prediction-decay curve whose fall-off
   *    separates chaos (skill decays with tp) from measurement noise (flat).
   *
-  * Scale: pairs are generated per series only (equi-join on the series
-  * key) — a million independent series parallelize freely; top-(E+1) is a
-  * literal-limit row_number window, so InferWindowGroupLimit turns it into
-  * a map-side TopK heap before the shuffle. The tp-sweep computes the kNN
+  * Embedding, leave-one-out top-(E+1), weights and the guarded rho are
+  * the shared [[Knn]] primitive. Scale: pairs are generated per series
+  * only (equi-join on the series key) — a million independent series
+  * parallelize freely. The tp-sweep computes the kNN
   * ONCE: the library is pinned to rows carrying the full maxTp horizon, so
   * the neighbor set (and the weights) are tp-invariant and each extra
   * horizon only widens rows through one shared groupBy — no per-tp join.
@@ -51,80 +50,28 @@ object Simplex {
       tp: Int = 1
   ): DataFrame = {
     require(maxE >= 1 && tau >= 1 && tp >= 1, "maxE, tau, tp must be >= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession) // graft_exp weight kernel
     val k = keys.map(col)
-    val w = Window.partitionBy(k: _*).orderBy(order: _*)
     // one pass materializes every coordinate any E needs: e0..e{maxE-1}
     // plus the per-E forecast target f{e} = lead((e-1)*tau + tp)
-    val leadCols = (0 until maxE).map { j =>
-      (if (j == 0) value else lead(value, j * tau).over(w)).as(s"e$j")
-    } ++ (1 to maxE).map { e =>
-      lead(value, (e - 1) * tau + tp).over(w).as(s"f$e")
-    }
     // localCheckpoint: the embedded relation feeds BOTH sides of maxE
     // self-joins (the FnnDim/LagCcm lesson — without it the scan + windows
     // re-execute 2*maxE times)
-    val emb = df
-      .select(k ++ Seq((row_number().over(w) - 1).cast("long").as("idx")) ++ leadCols: _*)
+    val emb = Knn
+      .embed(df, keys, order, value, maxE, tau, (1 to maxE).map(e => (s"f$e", value, (e - 1) * tau + tp)))
       .localCheckpoint()
 
     val perE = (1 to maxE).map { e =>
       val rows = emb.filter(col(s"e${e - 1}").isNotNull && col(s"f$e").isNotNull)
-      val joinCond = keys.map(kn => col(s"t.$kn") === col(s"i.$kn")).reduce(_ && _) &&
-        col("t.idx") =!= col("i.idx")
-      val dist2 = (0 until e)
-        .map(j => (col(s"t.e$j") - col(s"i.e$j")) * (col(s"t.e$j") - col(s"i.e$j")))
-        .reduce(_ + _)
-      val pairs = rows
-        .as("t")
-        .join(rows.as("i"), joinCond)
-        .select(
-          (keys.map(kn => col(s"t.$kn").as(kn)) ++ Seq(
-            col("t.idx").as("t_idx"),
-            col("t.f" + e).as("actual"),
-            col("i.idx").as("i_idx"),
-            col("i.f" + e).as("i_f"),
-            sqrt(dist2).as("dist")
-          )): _*
-        )
-      // top-(E+1) with a LITERAL limit — InferWindowGroupLimit applies
-      val wNN = Window.partitionBy((k :+ col("t_idx")): _*).orderBy(col("dist").asc, col("i_idx").asc)
-      val nn = pairs.withColumn("rn", row_number().over(wNN)).filter(col("rn") <= e + 1)
-      val wMin = Window.partitionBy((k :+ col("t_idx")): _*)
-      nn.withColumn("min_dist", min(col("dist")).over(wMin))
-        .withColumn(
-          "wgt",
-          when(col("dist") < 1e-12, 1.0)
-            .otherwise(expr("graft_exp((- dist) / (min_dist + 1e-8D))"))
-        )
-        .groupBy((k ++ Seq(col("t_idx"), col("actual"))): _*)
-        .agg(sum(col("wgt")).as("sw"), sum(col("wgt") * col("i_f")).as("swt"))
-        .select(
-          (k :+ lit(e).as("e") :+ col("actual") :+
-            when(col("sw") === 0.0, 0.0).otherwise(col("swt") / col("sw")).as("pred")): _*
-        )
+      Knn
+        .weighted(rows, keys, e, e + 1, Seq(col(s"q.f$e").as("actual"), col(s"l.f$e").as("lib_f")))
+        .groupBy((k ++ Seq(col("q_idx"), col("actual"))): _*)
+        .agg(sum(col("w")).as("sw"), sum(col("w") * col("lib_f")).as("swt"))
+        .select((k :+ lit(e).as("e") :+ col("actual") :+ Knn.predicted(col("sw"), col("swt")).as("pred")): _*)
     }
-    perE
-      .reduce(_ unionByName _)
-      .groupBy((k :+ col("e")): _*)
-      .agg(
-        count(lit(1)).as("n_pred"),
-        covar_samp(col("actual"), col("pred")).as("cv"),
-        stddev_samp(col("actual")).as("s1"),
-        stddev_samp(col("pred")).as("s2")
-      )
-      // guarded Pearson — ANSI corr() throws on zero variance (the Smap
-      // lesson); degenerate groups take the C9 convention rho = 0.0
-      .withColumn(
-        "rho",
-        when(
-          col("cv").isNull || col("s1").isNull || col("s2").isNull ||
-            isnan(col("cv")) || isnan(col("s1")) || isnan(col("s2")) ||
-            col("s1") === 0.0 || col("s2") === 0.0,
-          0.0
-        ).otherwise(col("cv") / (col("s1") * col("s2")))
-      )
-      .select((k :+ col("e") :+ col("n_pred") :+ (round(col("rho"), 6) + lit(0.0)).as("rho")): _*)
+    val byE = perE.reduce(_ unionByName _).groupBy((k :+ col("e")): _*)
+    Knn
+      .guardedRho(byE, col("actual"), col("pred"), count(lit(1)).as("n_pred"))
+      .select((k :+ col("e") :+ col("n_pred") :+ col("rho")): _*)
   }
 
   /** Prediction-decay sweep: per-(series, tp) skill for tp = 1..maxTp at a
@@ -144,78 +91,32 @@ object Simplex {
       tau: Int = 1
   ): DataFrame = {
     require(e >= 1 && tau >= 1 && maxTp >= 1, "e, tau, maxTp must be >= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession) // graft_exp weight kernel
     val k = keys.map(col)
-    val w = Window.partitionBy(k: _*).orderBy(order: _*)
-    val leadCols = (0 until e).map { j =>
-      (if (j == 0) value else lead(value, j * tau).over(w)).as(s"e$j")
-    } ++ (1 to maxTp).map { t =>
-      lead(value, (e - 1) * tau + t).over(w).as(s"f$t")
-    }
-    val emb = df
-      .select(k ++ Seq((row_number().over(w) - 1).cast("long").as("idx")) ++ leadCols: _*)
+    val emb = Knn
+      .embed(df, keys, order, value, e, tau, (1 to maxTp).map(t => (s"f$t", value, (e - 1) * tau + t)))
       // the full-horizon restriction that makes the neighbor set tp-invariant
       .filter(col(s"f$maxTp").isNotNull)
       .localCheckpoint()
-
-    val joinCond = keys.map(kn => col(s"t.$kn") === col(s"i.$kn")).reduce(_ && _) &&
-      col("t.idx") =!= col("i.idx")
-    val dist2 = (0 until e)
-      .map(j => (col(s"t.e$j") - col(s"i.e$j")) * (col(s"t.e$j") - col(s"i.e$j")))
-      .reduce(_ + _)
-    val pairs = emb
-      .as("t")
-      .join(emb.as("i"), joinCond)
-      .select(
-        (keys.map(kn => col(s"t.$kn").as(kn)) ++ Seq(
-          col("t.idx").as("t_idx"),
-          col("i.idx").as("i_idx"),
-          sqrt(dist2).as("dist")
-        ) ++ (1 to maxTp).flatMap(t =>
-          Seq(col(s"t.f$t").as(s"tf$t"), col(s"i.f$t").as(s"if$t"))
-        )): _*
-      )
-    val wNN = Window.partitionBy((k :+ col("t_idx")): _*).orderBy(col("dist").asc, col("i_idx").asc)
-    val nn = pairs.withColumn("rn", row_number().over(wNN)).filter(col("rn") <= e + 1)
-    val wMin = Window.partitionBy((k :+ col("t_idx")): _*)
-    val weighted = nn
-      .withColumn("min_dist", min(col("dist")).over(wMin))
-      .withColumn(
-        "wgt",
-        when(col("dist") < 1e-12, 1.0)
-          .otherwise(expr("graft_exp((- dist) / (min_dist + 1e-8D))"))
-      )
+    val horizons = (1 to maxTp).flatMap(t => Seq(col(s"q.f$t").as(s"tf$t"), col(s"l.f$t").as(s"if$t")))
     // ONE aggregation carries every horizon as a column pair (actual via
     // group key, weighted neighbor sum via agg) ...
-    val sums = weighted
-      .groupBy((k ++ Seq(col("t_idx")) ++ (1 to maxTp).map(t => col(s"tf$t"))): _*)
+    val sums = Knn
+      .weighted(emb, keys, e, e + 1, horizons)
+      .groupBy((k ++ Seq(col("q_idx")) ++ (1 to maxTp).map(t => col(s"tf$t"))): _*)
       .agg(
-        sum(col("wgt")).as("sw"),
-        (1 to maxTp).map(t => sum(col("wgt") * col(s"if$t")).as(s"swt$t")): _*
+        sum(col("w")).as("sw"),
+        (1 to maxTp).map(t => sum(col("w") * col(s"if$t")).as(s"swt$t")): _*
       )
     // ... then unpivots in-stage (stack generator — no shuffle, no per-tp
     // re-join) to (tp, actual, pred) rows
     val stackExpr = (1 to maxTp)
       .map(t => s"$t, tf$t, CASE WHEN sw = 0.0 THEN 0.0 ELSE swt$t / sw END")
       .mkString(", ")
-    sums
+    val byTp = sums
       .selectExpr(keys :+ s"stack($maxTp, $stackExpr) AS (tp, actual, pred)": _*)
       .groupBy((k :+ col("tp")): _*)
-      .agg(
-        count(lit(1)).as("n_pred"),
-        covar_samp(col("actual"), col("pred")).as("cv"),
-        stddev_samp(col("actual")).as("s1"),
-        stddev_samp(col("pred")).as("s2")
-      )
-      .withColumn(
-        "rho",
-        when(
-          col("cv").isNull || col("s1").isNull || col("s2").isNull ||
-            isnan(col("cv")) || isnan(col("s1")) || isnan(col("s2")) ||
-            col("s1") === 0.0 || col("s2") === 0.0,
-          0.0
-        ).otherwise(col("cv") / (col("s1") * col("s2")))
-      )
-      .select((k :+ col("tp") :+ col("n_pred") :+ (round(col("rho"), 6) + lit(0.0)).as("rho")): _*)
+    Knn
+      .guardedRho(byTp, col("actual"), col("pred"), count(lit(1)).as("n_pred"))
+      .select((k :+ col("tp") :+ col("n_pred") :+ col("rho")): _*)
   }
 }

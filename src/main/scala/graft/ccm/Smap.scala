@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * guards: `d̄ = 0` (constant source series) falls back to uniform
   * weights; a singular normal matrix (|den| <= 1e-12) drops the slope and
   * predicts the weighted mean; corr over <2 points or zero variance → 0.0
-  * (the C9 convention).
+  * (the C9 convention, [[Knn.guardedRho]]).
   */
 object Smap {
   val DefaultThetas: Seq[Double] = Seq(0.0, 0.5, 1.0, 2.0, 4.0, 8.0)
@@ -242,30 +242,13 @@ object Smap {
           when(abs(den) > 1e-12, ($"sw" * $"swxy" - $"swx" * $"swy") / den).otherwise(0.0)
         )
         .withColumn("pred", ($"swy" - $"bc" * $"swx") / $"sw" + $"bc" * $"ts_")
-      // Pearson from guarded co-moments rather than corr(): under ANSI
-      // mode (Spark 4 default) corr THROWS on zero variance instead of
-      // returning NaN, so the C9 degenerate→0.0 convention has to be
-      // applied BEFORE the division — a `when` guard around cv/(s1·s2)
-      // keeps the branch unevaluated on degenerate groups. (Engine-delta
-      // vs DuckDB's corr is ulp-level and absorbed by the 6-dp round,
-      // like every other aggregation-order delta in this family.)
-      preds
-        .groupBy($"skey", $"theta")
-        .agg(
-          covar_samp($"tg", $"pred").as("cv"),
-          stddev_samp($"tg").as("s1"),
-          stddev_samp($"pred").as("s2")
-        )
-        .withColumn(
-          "rho",
-          when(
-            $"cv".isNull || $"s1".isNull || $"s2".isNull ||
-              isnan($"cv") || isnan($"s1") || isnan($"s2") ||
-              $"s1" === 0.0 || $"s2" === 0.0,
-            0.0
-          ).otherwise($"cv" / ($"s1" * $"s2"))
-        )
-        .select($"skey", lit(dir).as("direction"), $"theta", (round($"rho", 6) + lit(0.0)).as("rho"))
+      // Pearson from guarded co-moments rather than corr() (ANSI corr
+      // throws on zero variance). Engine-delta vs DuckDB's corr is
+      // ulp-level and absorbed by the 6-dp round, like every other
+      // aggregation-order delta in this family.
+      Knn
+        .guardedRho(preds.groupBy($"skey", $"theta"), $"tg", $"pred")
+        .select($"skey", lit(dir).as("direction"), $"theta", $"rho")
     }
 
     val u = oneDir("y", "x", Ccm.DirXCausesY).unionByName(oneDir("x", "y", Ccm.DirYCausesX))
@@ -380,23 +363,9 @@ object Smap {
       val sums = weighted.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
       val preds = sums.withColumn("pred", expr(predExpr))
       // guarded Pearson — same C9 degenerate→0.0 convention as the E=1 path
-      preds
-        .groupBy($"skey", $"theta")
-        .agg(
-          covar_samp($"tg", $"pred").as("cv"),
-          stddev_samp($"tg").as("s1"),
-          stddev_samp($"pred").as("s2")
-        )
-        .withColumn(
-          "rho",
-          when(
-            $"cv".isNull || $"s1".isNull || $"s2".isNull ||
-              isnan($"cv") || isnan($"s1") || isnan($"s2") ||
-              $"s1" === 0.0 || $"s2" === 0.0,
-            0.0
-          ).otherwise($"cv" / ($"s1" * $"s2"))
-        )
-        .select($"skey", lit(dir).as("direction"), $"theta", (round($"rho", 6) + lit(0.0)).as("rho"))
+      Knn
+        .guardedRho(preds.groupBy($"skey", $"theta"), $"tg", $"pred")
+        .select($"skey", lit(dir).as("direction"), $"theta", $"rho")
     }
 
     val u = oneDir("y", "x", Ccm.DirXCausesY).unionByName(oneDir("x", "y", Ccm.DirYCausesX))

@@ -119,17 +119,25 @@ class MultiviewSpec extends SparkTestBase {
   }
 
   test("matches an independent sequential implementation on random series") {
-    for (seed <- 1 to 3) {
+    val random = (1 to 3).map { seed =>
       val rng = new scala.util.Random(seed)
       val n = 40 + rng.nextInt(20)
-      val a = Array.fill(n)(rng.nextDouble())
-      val b = Array.fill(n)(rng.nextDouble())
+      (s"seed=$seed", Array.fill(n)(rng.nextDouble()), Array.fill(n)(rng.nextDouble()))
+    }
+    // values quantised to 0.1: many equal distances, so the (dist, idx)
+    // tie-break decides the neighbor sets
+    val tied = {
+      val rng = new scala.util.Random(11)
+      def q() = math.round(rng.nextDouble() * 10) / 10.0
+      ("quantised", Array.fill(50)(q()), Array.fill(50)(q()))
+    }
+    for ((label, a, b) <- random :+ tied) {
       val got = run(a, b)(1L)
       val want = localMultiview(a, b)
       val close = got._1 == want._1 && got._2 == want._2 &&
         math.abs(got._3 - want._3) < 2e-6 && got._4 == want._4 &&
         math.abs(got._5 - want._5) < 2e-6
-      assert(close, s"seed=$seed n=$n spark=$got local=$want")
+      assert(close, s"$label n=${a.length} spark=$got local=$want")
     }
   }
 }
