@@ -45,24 +45,11 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER: same multi-executor lever as Verify (baselines
-    // and bars only mean anything on the default local master, but the
-    // probe needs timed multi-executor runs too)
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // SPARK_GRAFT_SPARK_CONF: same semicolon-separated extra-conf lever as
-    // Verify (executor classpath/opens/memory for multi-executor probes);
-    // format and limitation documented once in [[ExtraConf]].
-    val spark = ExtraConf
-      .applyTo(
-        SparkSession.builder()
-          .master(master)
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-      )
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_GRAFT_MASTER / SPARK_GRAFT_CPUS / SPARK_GRAFT_SPARK_CONF: the
+    // same levers as Verify (baselines and bars only mean anything on the
+    // default local master, but the multi-executor probe needs timed runs
+    // too); documented once in [[ExtraConf.session]].
+    val spark = ExtraConf.session(defaultCpus = 4)
 
     // Fixed canary: constant-cost scan + small shuffle, no data files, no
     // caching effects. Its drift measures HOST noise, not query cost.

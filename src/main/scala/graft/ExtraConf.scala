@@ -30,9 +30,29 @@ object ExtraConf {
   /** Pairs from the `SPARK_GRAFT_SPARK_CONF` environment variable. */
   def fromEnv: Seq[(String, String)] = parse(sys.env.get("SPARK_GRAFT_SPARK_CONF"))
 
-  /** Fold the env pairs into a session builder (the shape all four
-    * entry points use).
+  /** Fold the env pairs into a session builder ([[session]] and the
+    * multi-executor probes).
     */
   def applyTo(builder: SparkSession.Builder): SparkSession.Builder =
     fromEnv.foldLeft(builder)((b, kv) => b.config(kv._1, kv._2))
+
+  /** The session of the Bench, Verify and Sf1Seed mains: master
+    * `SPARK_GRAFT_MASTER` (default `local[cpus]`), shuffle partitions =
+    * cpus, where cpus is `SPARK_GRAFT_CPUS` or `defaultCpus`; UTC session
+    * time zone, UI off, the `SPARK_GRAFT_SPARK_CONF` pairs on top, and
+    * WARN logging.
+    */
+  def session(defaultCpus: Int, appName: Option[String] = None): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val builder = SparkSession.builder().master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+    val spark = applyTo(
+      appName
+        .fold(builder)(builder.appName)
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+    ).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

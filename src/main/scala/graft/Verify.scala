@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,27 +8,12 @@ object Verify {
     // optional trailing query names -> verify only those (local iteration)
     val only: Set[String] = args.drop(2).toSet
     def wanted(name: String): Boolean = only.isEmpty || only(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the master (e.g. local-cluster[2,16,8192]
-    // for the multi-executor probe — SCALE.md "Multi-executor execution");
-    // extra spark.* confs for such runs ride -D system properties, which
-    // SparkConf folds in underneath this builder.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    // SPARK_GRAFT_SPARK_CONF: semicolon-separated extra spark confs
-    // ("k=v;k2=v2") — the multi-executor probe needs executor classpath /
-    // module-opens / memory settings that contain spaces, which the
-    // build.sbt javaOptions splitter cannot carry. Format and the
-    // no-semicolons-in-values limitation: [[ExtraConf]].
-    val spark = ExtraConf
-      .applyTo(
-        SparkSession.builder()
-          .master(master)
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-      )
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // for the multi-executor probe — SCALE.md "Multi-executor execution").
+    // That probe's executor classpath / module-opens / memory settings
+    // contain spaces, which the build.sbt javaOptions splitter cannot
+    // carry, so they ride SPARK_GRAFT_SPARK_CONF ([[ExtraConf]]).
+    val spark = ExtraConf.session(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

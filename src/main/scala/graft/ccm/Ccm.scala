@@ -38,6 +38,26 @@ object Ccm {
   val DirXCausesY = "x_causes_y"
   val DirYCausesX = "y_causes_x"
 
+  /** The direction convention (`lib/ccm.ex:13-14,49-53`) as (name,
+    * source, target) over the [[wide]] columns: x_causes_y embeds Y and
+    * predicts X, y_causes_x the reverse. x_causes_y comes first, so every
+    * bidirectional result lists its rows in this order.
+    */
+  private[ccm] val Directions: Seq[(String, String, String)] =
+    Seq((DirXCausesY, "y", "x"), (DirYCausesX, "x", "y"))
+
+  /** One per-direction branch `oneDir(source, target, name)` per
+    * [[Directions]] entry, unioned by name in table order.
+    */
+  private[ccm] def bothDirections(oneDir: (String, String, String) => DataFrame): DataFrame =
+    Directions.map { case (dir, src, tgt) => oneDir(src, tgt, dir) }.reduce(_ unionByName _)
+
+  /** The wide input every bidirectional EDM operator starts from:
+    * (skey: long, x, y, order...), one row per time step.
+    */
+  private[ccm] def wide(df: DataFrame, skey: Column, order: Seq[String], x: Column, y: Column): DataFrame =
+    df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
+
   /** Declarative bidirectional CCM over a wide DataFrame of many series.
     *
     * @param df     input with one row per time step
@@ -58,13 +78,13 @@ object Ccm {
   ): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val base =
-      df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
+    val base = wide(df, skey, order, x, y)
     val ord = order.map(col)
     // Direction trap (`lib/ccm.ex:49-53`): x_causes_y embeds Y, targets X
-    // — encoded once in [[CcmPipeline.embeddedBoth]], which computes both
-    // directions in a single window pass (round 17; the former two-branch
-    // union sorted and windowed the shared base twice).
+    // — the [[Directions]] table, which [[CcmPipeline.embeddedBoth]]
+    // turns into both directions' embeddings in a single window pass
+    // (round 17; the former two-branch union sorted and windowed the
+    // shared base twice).
     val emb = CcmPipeline.embeddedBoth(base, Seq("skey"), ord, $"x", $"y", spec.embeddingDim, spec.tau)
     val keys = Seq("skey", "direction")
     // localCheckpoint: the ranked relation feeds BOTH sides of the kNN

@@ -61,13 +61,13 @@ object CcmPipeline {
     * §2.4 "remove shuffles outright"): the historical form unioned two
     * [[embedded]] branches — each with its own Sort + two Window passes
     * over the same shuffled base (AQE reuses the identical exchange, but
-    * everything above it ran twice). Here ONE window spec computes the
-    * leads of BOTH columns plus the shared idx, and an in-stage
-    * `explode(array(structXcY, structYcX))` splits rows per direction —
-    * exactly the union's row multiset (`x_causes_y` embeds Y targets X,
-    * `lib/ccm.ex:49-53`), with one Sort and one Window pass. Generator +
-    * top-level filter keep whole-stage codegen (the reusePairs lesson:
-    * higher-order filter() is interpreted-only).
+    * everything above it ran twice). Here ONE [[Knn.embed]] pass computes
+    * Y's coordinates, X's leads and the shared idx, and an in-stage
+    * `explode(array(...))` built from the [[Ccm.Directions]] table splits
+    * rows per direction — exactly the union's row multiset (`x_causes_y`
+    * embeds Y targets X, `lib/ccm.ex:49-53`), with one Sort and one
+    * Window pass. Generator + top-level filter keep whole-stage codegen
+    * (the reusePairs lesson: higher-order filter() is interpreted-only).
     */
   def embeddedBoth(
       df: DataFrame,
@@ -78,36 +78,23 @@ object CcmPipeline {
       e: Int,
       tau: Int
   ): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
-    def leads(c: Column, tag: String): Seq[Column] =
-      (0 until e).map(j =>
-        (if (j == 0) c else lead(c, j * tau).over(w)).as(s"__$tag$j")
-      )
-    // window pass: every lead of both columns + the shared idx, flat.
-    // The direction's target is the OTHER column's last lead — the same
-    // lead(col, (e-1)*tau) expression as __x{e-1}/__y{e-1}, so it is
-    // reused below instead of aliased twice (ADVICE r17 item 3).
-    val flat = df.select(
-      keys.map(col) ++
-        Seq((row_number().over(w) - 1).cast("long").as("idx")) ++
-        leads(y, "y") ++ leads(x, "x"): _*
-    )
-    def dirStruct(dir: String, srcTag: String, tgtTag: String): Column =
+    // window pass: Y's leads as e0..e{E-1}, X's as __x0..__x{E-1}, flat.
+    // A direction's target is the OTHER column's last lead — the same
+    // lead(col, (e-1)*tau) expression as that column's last coordinate,
+    // so it is reused below instead of aliased twice (ADVICE r17 item 3).
+    val flat = Knn.embed(df, keys, order, y, e, tau, (0 until e).map(j => (s"__x$j", x, j * tau)))
+    val prefix = Map("y" -> "e", "x" -> "__x")
+    def dirStruct(dir: String, src: String, tgt: String): Column =
       struct(
         (lit(dir).as("direction") +:
-          (0 until e).map(j => col(s"__$srcTag$j").as(s"e$j"))) :+
-          col(s"__$tgtTag${e - 1}").as("tgt"): _*
+          (0 until e).map(j => col(s"${prefix(src)}$j").as(s"e$j"))) :+
+          col(s"${prefix(tgt)}${e - 1}").as("tgt"): _*
       )
     flat
       .select(
         keys.map(col) ++ Seq(
           col("idx"),
-          explode(
-            array(
-              dirStruct(graft.ccm.Ccm.DirXCausesY, "y", "x"),
-              dirStruct(graft.ccm.Ccm.DirYCausesX, "x", "y")
-            )
-          ).as("__d")
+          explode(array(Ccm.Directions.map { case (d, s, t) => dirStruct(d, s, t) }: _*)).as("__d")
         ): _*
       )
       .select(

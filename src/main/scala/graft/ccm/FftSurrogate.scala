@@ -49,8 +49,7 @@ object FftSurrogate {
   ): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val base =
-      df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
+    val base = Ccm.wide(df, skey, order, x, y)
     val w = Window.partitionBy("skey").orderBy(order.map(col): _*)
     val bi = base
       .withColumn("i", row_number().over(w).cast("long"))

@@ -29,8 +29,9 @@ import org.apache.spark.sql.functions._
   * Library is leave-one-out (every other embedding row of the series);
   * k = E+1 neighbors by (distance, idx); weights are the reference's
   * exact-hit/stabilizer formula (`lib/ccm.ex:246-262`) — all three from
-  * the shared [[Knn]] primitive. Directions follow
-  * the CCM convention: x_causes_y embeds Y, predicts X.
+  * the shared [[Knn]] primitive. The input projection ([[Ccm.wide]]) and
+  * the directions ([[Ccm.Directions]]: x_causes_y embeds Y, predicts X)
+  * are the ones every bidirectional EDM operator shares.
   *
   * Scale: one pair join per series (the series-id partition axis), lag
   * fan-out multiplies only the k-row neighbor relation, never the pair
@@ -56,12 +57,11 @@ object LagCcm {
     require(lags.nonEmpty, "lags must be non-empty")
     val spark = df.sparkSession
     import spark.implicits._
-    val base =
-      df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
+    val base = Ccm.wide(df, skey, order, x, y)
     val ord = order.map(col)
     val lagDf = broadcast(lags.toDF("lag").select(col("lag").cast("long").as("lag")))
 
-    def oneDir(src: Column, tgt: Column, dir: String): DataFrame = {
+    def oneDir(src: String, tgt: String, dir: String): DataFrame = {
       // rel = (skey, idx, e0..e{E-1}, tgt). localCheckpoint: rel feeds
       // FOUR join sides (pair q/l, shifted library targets, shifted
       // actuals) — without materialization each
@@ -69,7 +69,7 @@ object LagCcm {
       // (8 scans per query, visible as duplicated WindowGroupLimit
       // subtrees in CcmFanoutPlanSpec's plan); at cluster scale this is
       // the persisted embedding table every EDM stage shares
-      val rel = CcmPipeline.embedded(base, Seq("skey"), ord, src, tgt, e, tau).localCheckpoint()
+      val rel = CcmPipeline.embedded(base, Seq("skey"), ord, col(src), col(tgt), e, tau).localCheckpoint()
       val nn = Knn.weighted(rel, Seq("skey"), e, e + 1).select($"skey", $"q_idx", $"l_idx", $"w")
       // lag fan-out on the k-row neighbor relation; shifted targets come
       // from the embedded relation itself via (skey, idx + lag)
@@ -88,7 +88,7 @@ object LagCcm {
         .select($"skey", lit(dir).as("direction"), $"lag", $"rho")
     }
 
-    val u = oneDir($"y", $"x", Ccm.DirXCausesY).unionByName(oneDir($"x", $"y", Ccm.DirYCausesX))
+    val u = Ccm.bothDirections(oneDir)
     val wD = Window.partitionBy("skey", "direction")
     u.withColumn("rho_max", max($"rho").over(wD))
       .withColumn("best_lag", min(when($"rho" === $"rho_max", $"lag")).over(wD))

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   *  - pick the first local minimum of MI(tau) (fallback: tau = 1).
   *
   * Spark-first shape: ALL candidate taus are computed in one window pass
-  * (lead(value, 1..maxTau) over a single window spec collapses into one
-  * Window operator), then one hash aggregation per histogram level — no
-  * self-joins, no per-tau scans. Scales as one shuffle keyed on the series
-  * id regardless of maxTau.
+  * ([[Knn.embed]]'s leads 1..maxTau over a single window spec collapse
+  * into one Window operator), then one hash aggregation per histogram
+  * level — no self-joins, no per-tau scans. Scales as one shuffle keyed
+  * on the series id regardless of maxTau.
   */
 object MiTau {
 
@@ -37,18 +37,20 @@ object MiTau {
   ): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession) // graft_ln MI series
     val k = keys.map(col)
-    val w = Window.partitionBy(k: _*).orderBy(order: _*)
     val wAll = Window.partitionBy(k: _*)
 
-    // one window pass: x, its min/max (bin range), and every lead
-    val leads = (1 to maxTau).map(t => lead(value, t).over(w).as(s"y$t"))
-    val base = df.select(
-      k ++ Seq(
-        value.as("x"),
-        min(value).over(wAll).as("mn"),
-        max(value).over(wAll).as("mx")
-      ) ++ leads: _*
-    )
+    // x ([[Knn.embed]]'s e0) and every lead from one window pass, then
+    // x's min/max (the bin range); the unused idx is pruned
+    val leads = (1 to maxTau).map(t => (s"y$t", value, t))
+    val base = Knn
+      .embed(df, keys, order, value, 1, 1, leads)
+      .select(
+        k ++ Seq(
+          col("e0").as("x"),
+          min(col("e0")).over(wAll).as("mn"),
+          max(col("e0")).over(wAll).as("mx")
+        ) ++ leads.map(l => col(l._1)): _*
+      )
 
     // long form (keys, tau, x, y) via stack; null leads (series tail) drop
     val stackExpr =

@@ -22,8 +22,14 @@ import org.apache.spark.sql.functions._
   * per stage, and replayable in ANSI SQL (the ccm_smap oracle). Library
   * membership is leave-one-out (every other point of the same series).
   *
-  * Directions follow the CCM convention (`lib/ccm.ex:49-53`): x_causes_y
-  * maps FROM Y (src) TO X (tgt).
+  * Every entry point is one chain: the wide input indexed once
+  * ([[indexed]]), one branch per direction ([[Ccm.Directions]],
+  * `lib/ccm.ex:49-53`: x_causes_y maps FROM Y (src) TO X (tgt)), a
+  * leave-one-out pair join, the d̄ + θ-weight step ([[thetaWeighted]]),
+  * then a solve — the E=1 five-sums closed form ([[closedForm]], shared
+  * by [[coeffs]] and [[bidirectional]]) or the general-E Cramer solve
+  * ([[bidirectionalE]]) — and, for the θ sweeps, one rho + `nonlinear`
+  * tail ([[sweep]]).
   *
   * Scale: pairs are generated per series only (equi-join on the series
   * key), so a million independent series parallelize freely; per-series
@@ -97,16 +103,109 @@ object Smap {
     s"CASE WHEN abs($detA) > 1e-12 THEN ($numStr) / ($detA) ELSE b0 / sw END"
   }
 
+  /** The wide input ([[Ccm.wide]]) with its dense per-series time index:
+    * (skey, idx, x, y). `idx` is 1-based because [[coeffs]] publishes it
+    * as `t_idx`. Registers the graft_exp weight kernel on the way.
+    */
+  private def indexed(df: DataFrame, skey: Column, order: Seq[String], x: Column, y: Column): DataFrame = {
+    graft.functions.GraftFunctions.register(df.sparkSession) // graft_exp weight kernel
+    val wIdx = Window.partitionBy("skey").orderBy(order.map(col): _*)
+    Ccm
+      .wide(df, skey, order, x, y)
+      .withColumn("idx", row_number().over(wIdx).cast("long"))
+      .select("skey", "idx", "x", "y")
+  }
+
+  /** Adds d̄ (the target's mean pair distance) and the S-map weight
+    * w = exp(-θ·d/d̄) to a pair relation (skey, t_idx, ..., d); d̄ = 0 (a
+    * constant source) falls back to uniform weights 1. θ is either one
+    * literal folded into the expression (`Left`, [[coeffs]]) or the
+    * `theta` column of a broadcast θ table (`Right`, the sweeps), crossed
+    * in after d̄ so the window runs once per pair, not per (pair, θ).
+    */
+  private def thetaWeighted(pairs: DataFrame, theta: Either[Double, DataFrame]): DataFrame = {
+    // mean distance to the target's library: window aggregate on the
+    // pair relation (already partitioned by the join) — no extra shuffle
+    val withBar = pairs.withColumn("dbar", avg(col("d")).over(Window.partitionBy("skey", "t_idx")))
+    val (rel, operand) = theta.fold(v => (withBar, s"${v}D"), t => (withBar.crossJoin(t), "theta"))
+    rel.withColumn("w", when(col("dbar") > 0.0, expr(s"graft_exp(((- $operand) * d) / dbar)")).otherwise(1.0))
+  }
+
+  /** The E=1 closed form for one direction of [[indexed]]: leave-one-out
+    * pairs `(src_i → tgt_i)` per series at distance |Δsrc|, θ weights,
+    * the five weighted sums per target, then the slope `bc` (0 when the
+    * normal matrix is singular, |den| <= 1e-12) and the prediction
+    * `pred`. Output: (skey, [theta,] t_idx, ts_, tg, sw, swx, swy, swxx,
+    * swxy, bc, pred); `theta` is a key only for a θ table.
+    */
+  private def closedForm(
+      indexed: DataFrame,
+      src: String,
+      tgt: String,
+      theta: Either[Double, DataFrame]
+  ): DataFrame = {
+    import indexed.sparkSession.implicits._
+    // localCheckpoint: rel feeds both pair-join sides (the LagCcm/
+    // bidirectionalE lesson — measured wins in both)
+    val rel = indexed.select($"skey", $"idx", col(src).as("s"), col(tgt).as("g")).localCheckpoint()
+    val pairs = rel
+      .as("t")
+      .join(rel.as("i"), $"t.skey" === $"i.skey" && $"t.idx" =!= $"i.idx")
+      .select(
+        $"t.skey".as("skey"), $"t.idx".as("t_idx"), $"t.s".as("ts_"),
+        $"t.g".as("tg"), $"i.s".as("is_"), $"i.g".as("ig")
+      )
+      .withColumn("d", abs($"is_" - $"ts_"))
+    val thetaKey = theta.fold(_ => Nil, _ => Seq($"theta"))
+    val sums = thetaWeighted(pairs, theta)
+      .groupBy(($"skey" +: thetaKey) ++ Seq($"t_idx", $"ts_", $"tg"): _*)
+      .agg(
+        sum($"w").as("sw"),
+        sum($"w" * $"is_").as("swx"),
+        sum($"w" * $"ig").as("swy"),
+        sum($"w" * $"is_" * $"is_").as("swxx"),
+        sum($"w" * $"is_" * $"ig").as("swxy")
+      )
+    val den = $"sw" * $"swxx" - $"swx" * $"swx"
+    sums
+      .withColumn("bc", when(abs(den) > 1e-12, ($"sw" * $"swxy" - $"swx" * $"swy") / den).otherwise(0.0))
+      .withColumn("pred", ($"swy" - $"bc" * $"swx") / $"sw" + $"bc" * $"ts_")
+  }
+
+  /** The θ-sweep tail of [[bidirectional]] and [[bidirectionalE]]: per
+    * direction ([[Ccm.bothDirections]]), rho per (skey, θ) between `tg`
+    * and `pred` of the relation `preds(src, tgt)` builds, then the
+    * `nonlinear` flag. Pearson comes from guarded co-moments
+    * ([[Knn.guardedRho]]) rather than corr() (ANSI corr throws on zero
+    * variance); the engine delta vs DuckDB's corr is ulp-level and
+    * absorbed by the 6-dp round, like every other aggregation-order delta
+    * in this family.
+    */
+  private def sweep(thetas: Seq[Double], nonlinearEps: Double)(
+      preds: (String, String) => DataFrame
+  ): DataFrame = {
+    val u = Ccm.bothDirections { (src, tgt, dir) =>
+      Knn
+        .guardedRho(preds(src, tgt).groupBy(col("skey"), col("theta")), col("tg"), col("pred"))
+        .select(col("skey"), lit(dir).as("direction"), col("theta"), col("rho"))
+    }
+    val minTheta = thetas.min
+    val wFlag = Window.partitionBy("skey", "direction")
+    u.withColumn("rho0", max(when(col("theta") === minTheta, col("rho"))).over(wFlag))
+      .withColumn("rho_max", max(col("rho")).over(wFlag))
+      .withColumn("nonlinear", col("rho_max") - col("rho0") > nonlinearEps)
+      .drop("rho0", "rho_max")
+  }
+
   /** Time-varying LOCAL SLOPES (the Deyle et al. 2016 "interaction
     * strength" series): at ONE θ, the E=1 S-map's per-target regression
     * coefficient bc_t = ∂tgt/∂src evaluated at every library point — the
     * quantity ecology actually reads off S-maps once nonlinearity is
     * established (a time series of how strongly src forces tgt, not one
-    * summary rho). Same pair-join / weighted-sums chain as
-    * [[bidirectional]] restricted to a single θ; emits the slope, the
-    * intercept-form prediction, and the target value per (skey,
-    * direction, t_idx). Degenerate guards identical (d̄=0 → uniform
-    * weights, singular matrix → slope 0).
+    * summary rho). The [[closedForm]] chain of [[bidirectional]] at a
+    * single literal θ; emits the slope, the intercept-form prediction,
+    * and the target value per (skey, direction, t_idx). Degenerate guards
+    * identical (d̄=0 → uniform weights, singular matrix → slope 0).
     */
   def coeffs(
       df: DataFrame,
@@ -116,62 +215,17 @@ object Smap {
       y: Column,
       theta: Double
   ): DataFrame = {
-    val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark) // graft_exp weight kernel
-    import spark.implicits._
-    val base =
-      df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
-    val wIdx = Window.partitionBy("skey").orderBy(order.map(col): _*)
-    val indexed = base
-      .withColumn("idx", row_number().over(wIdx).cast("long"))
-      .select("skey", "idx", "x", "y")
-
-    def oneDir(srcName: String, tgtName: String, dir: String): DataFrame = {
-      val rel = indexed
-        .select(col("skey"), col("idx"), col(srcName).as("s"), col(tgtName).as("g"))
-        .localCheckpoint()
-      val pairs = rel
-        .as("t")
-        .join(rel.as("i"), $"t.skey" === $"i.skey" && $"t.idx" =!= $"i.idx")
-        .select(
-          $"t.skey".as("skey"),
-          $"t.idx".as("t_idx"),
-          $"t.s".as("ts_"),
-          $"t.g".as("tg"),
-          $"i.s".as("is_"),
-          $"i.g".as("ig")
-        )
-        .withColumn("d", abs($"is_" - $"ts_"))
-      val wBar = Window.partitionBy("skey", "t_idx")
-      val sums = pairs
-        .withColumn("dbar", avg($"d").over(wBar))
-        .withColumn("w", when($"dbar" > 0.0, expr(s"graft_exp(((- ${theta}D) * d) / dbar)")).otherwise(1.0))
-        .groupBy($"skey", $"t_idx", $"ts_", $"tg")
-        .agg(
-          sum($"w").as("sw"),
-          sum($"w" * $"is_").as("swx"),
-          sum($"w" * $"ig").as("swy"),
-          sum($"w" * $"is_" * $"is_").as("swxx"),
-          sum($"w" * $"is_" * $"ig").as("swxy")
-        )
-      val den = $"sw" * $"swxx" - $"swx" * $"swx"
-      sums
-        .withColumn(
-          "bc",
-          when(abs(den) > 1e-12, ($"sw" * $"swxy" - $"swx" * $"swy") / den).otherwise(0.0)
-        )
-        .withColumn("pred", ($"swy" - $"bc" * $"swx") / $"sw" + $"bc" * $"ts_")
-        .select(
-          $"skey",
-          lit(dir).as("direction"),
-          $"t_idx",
-          $"tg",
-          (round($"bc", 6) + lit(0.0)).as("slope"),
-          (round($"pred", 6) + lit(0.0)).as("pred")
-        )
+    val base = indexed(df, skey, order, x, y)
+    Ccm.bothDirections { (src, tgt, dir) =>
+      closedForm(base, src, tgt, Left(theta)).select(
+        col("skey"),
+        lit(dir).as("direction"),
+        col("t_idx"),
+        col("tg"),
+        (round(col("bc"), 6) + lit(0.0)).as("slope"),
+        (round(col("pred"), 6) + lit(0.0)).as("pred")
+      )
     }
-
-    oneDir("y", "x", Ccm.DirXCausesY).unionByName(oneDir("x", "y", Ccm.DirYCausesX))
   }
 
   /** Output: (skey, direction, theta, rho, nonlinear) — rho rounded to
@@ -191,73 +245,10 @@ object Smap {
   ): DataFrame = {
     require(thetas.nonEmpty, "thetas must be non-empty")
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark) // graft_exp weight kernel
     import spark.implicits._
-    val base =
-      df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
-    val wIdx = Window.partitionBy("skey").orderBy(order.map(col): _*)
-    val indexed = base
-      .withColumn("idx", row_number().over(wIdx).cast("long"))
-      .select("skey", "idx", "x", "y")
+    val base = indexed(df, skey, order, x, y)
     val thetaDf = broadcast(thetas.toDF("theta"))
-
-    def oneDir(srcName: String, tgtName: String, dir: String): DataFrame = {
-      // localCheckpoint: rel feeds both pair-join sides (the LagCcm/
-      // bidirectionalE lesson — measured wins in both)
-      val rel = indexed
-        .select(col("skey"), col("idx"), col(srcName).as("s"), col(tgtName).as("g"))
-        .localCheckpoint()
-      val pairs = rel
-        .as("t")
-        .join(rel.as("i"), $"t.skey" === $"i.skey" && $"t.idx" =!= $"i.idx")
-        .select(
-          $"t.skey".as("skey"),
-          $"t.idx".as("t_idx"),
-          $"t.s".as("ts_"),
-          $"t.g".as("tg"),
-          $"i.s".as("is_"),
-          $"i.g".as("ig")
-        )
-        .withColumn("d", abs($"is_" - $"ts_"))
-      // mean distance to the target's library: window aggregate on the
-      // pair relation (already partitioned by the join) — no extra shuffle
-      val wBar = Window.partitionBy("skey", "t_idx")
-      val weighted = pairs
-        .withColumn("dbar", avg($"d").over(wBar))
-        .crossJoin(thetaDf)
-        .withColumn("w", when($"dbar" > 0.0, expr("graft_exp(((- theta) * d) / dbar)")).otherwise(1.0))
-      val sums = weighted
-        .groupBy($"skey", $"theta", $"t_idx", $"ts_", $"tg")
-        .agg(
-          sum($"w").as("sw"),
-          sum($"w" * $"is_").as("swx"),
-          sum($"w" * $"ig").as("swy"),
-          sum($"w" * $"is_" * $"is_").as("swxx"),
-          sum($"w" * $"is_" * $"ig").as("swxy")
-        )
-      val den = $"sw" * $"swxx" - $"swx" * $"swx"
-      val preds = sums
-        .withColumn(
-          "bc",
-          when(abs(den) > 1e-12, ($"sw" * $"swxy" - $"swx" * $"swy") / den).otherwise(0.0)
-        )
-        .withColumn("pred", ($"swy" - $"bc" * $"swx") / $"sw" + $"bc" * $"ts_")
-      // Pearson from guarded co-moments rather than corr() (ANSI corr
-      // throws on zero variance). Engine-delta vs DuckDB's corr is
-      // ulp-level and absorbed by the 6-dp round, like every other
-      // aggregation-order delta in this family.
-      Knn
-        .guardedRho(preds.groupBy($"skey", $"theta"), $"tg", $"pred")
-        .select($"skey", lit(dir).as("direction"), $"theta", $"rho")
-    }
-
-    val u = oneDir("y", "x", Ccm.DirXCausesY).unionByName(oneDir("x", "y", Ccm.DirYCausesX))
-    val minTheta = thetas.min
-    val wFlag = Window.partitionBy("skey", "direction")
-    u.withColumn("rho0", max(when($"theta" === minTheta, $"rho")).over(wFlag))
-      .withColumn("rho_max", max($"rho").over(wFlag))
-      .withColumn("nonlinear", $"rho_max" - $"rho0" > nonlinearEps)
-      .drop("rho0", "rho_max")
+    sweep(thetas, nonlinearEps)((src, tgt) => closedForm(base, src, tgt, Right(thetaDf)))
   }
 
   /** Moment aggregates for the general-E solve, over the pair relation's
@@ -312,19 +303,13 @@ object Smap {
     require(e >= 1, "embedding dimension must be >= 1")
     require(thetas.nonEmpty, "thetas must be non-empty")
     val spark = df.sparkSession
-    graft.functions.GraftFunctions.register(spark) // graft_exp weight kernel
     import spark.implicits._
-    val base =
-      df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
-    val wIdx = Window.partitionBy("skey").orderBy(order.map(col): _*)
-    val indexed = base
-      .withColumn("idx", row_number().over(wIdx).cast("long"))
-      .select("skey", "idx", "x", "y")
+    val base = indexed(df, skey, order, x, y)
     val thetaDf = broadcast(thetas.toDF("theta"))
     val predExpr = cramerPredExpr(e)
 
-    def oneDir(srcName: String, tgtName: String, dir: String): DataFrame = {
-      val rel = indexed.select(col("skey"), col("idx"), col(srcName).as("s"), col(tgtName).as("g"))
+    sweep(thetas, nonlinearEps) { (src, tgt) =>
+      val rel = base.select(col("skey"), col("idx"), col(src).as("s"), col(tgt).as("g"))
       val wLag = Window.partitionBy("skey").orderBy("idx")
       // localCheckpoint: emb feeds BOTH pair-join sides — the LagCcm
       // lesson (measured 1.74 vs 2.11 s there); without it each side
@@ -352,28 +337,13 @@ object Smap {
               .reduce(_ + _)
           )
         )
-      val wBar = Window.partitionBy("skey", "t_idx")
-      val weighted = pairs
-        .withColumn("dbar", avg($"d").over(wBar))
-        .crossJoin(thetaDf)
-        .withColumn("w", when($"dbar" > 0.0, expr("graft_exp(((- theta) * d) / dbar)")).otherwise(1.0))
       val groupCols =
         Seq($"skey", $"theta", $"t_idx", $"tg") ++ (1 to e).map(j => col(s"tv$j"))
       val aggs = momentAggs(e)
-      val sums = weighted.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
-      val preds = sums.withColumn("pred", expr(predExpr))
-      // guarded Pearson — same C9 degenerate→0.0 convention as the E=1 path
-      Knn
-        .guardedRho(preds.groupBy($"skey", $"theta"), $"tg", $"pred")
-        .select($"skey", lit(dir).as("direction"), $"theta", $"rho")
+      thetaWeighted(pairs, Right(thetaDf))
+        .groupBy(groupCols: _*)
+        .agg(aggs.head, aggs.tail: _*)
+        .withColumn("pred", expr(predExpr))
     }
-
-    val u = oneDir("y", "x", Ccm.DirXCausesY).unionByName(oneDir("x", "y", Ccm.DirYCausesX))
-    val minTheta = thetas.min
-    val wFlag = Window.partitionBy("skey", "direction")
-    u.withColumn("rho0", max(when($"theta" === minTheta, $"rho")).over(wFlag))
-      .withColumn("rho_max", max($"rho").over(wFlag))
-      .withColumn("nonlinear", $"rho_max" - $"rho0" > nonlinearEps)
-      .drop("rho0", "rho_max")
   }
 }

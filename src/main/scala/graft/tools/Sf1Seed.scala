@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{BenchCanary, ExtraConf, SparkEntry}
 
 /** Fresh-JVM sf1-baseline seeding (VERDICT r16 item 3).
@@ -14,8 +12,9 @@ import graft.{BenchCanary, ExtraConf, SparkEntry}
   * every above-bar reading triggered a recurring manual adjudication.
   *
   * Protocol, per invocation (= ONE fresh JVM):
-  *  1. same session shape as Bench (local[SPARK_GRAFT_CPUS], shuffle
-  *     partitions = cpus, UTC, extra confs via SPARK_GRAFT_SPARK_CONF);
+  *  1. the Bench session ([[ExtraConf.session]]: local[SPARK_GRAFT_CPUS],
+  *     shuffle partitions = cpus, UTC, extra confs via
+  *     SPARK_GRAFT_SPARK_CONF);
   *  2. generate-or-reuse the 10x replica with the shared content stamp;
   *  3. Bench's exact JIT warmup (ccm_curve + ccm_convergence at sf0.001);
   *  4. canary evidence: 3 scan-shuffle + 2 pair-join samples before, one
@@ -49,18 +48,7 @@ object Sf1Seed {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = ExtraConf
-      .applyTo(
-        SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-          .appName("graft-sf1-seed")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-      )
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ExtraConf.session(defaultCpus = 32, appName = Some("graft-sf1-seed"))
 
     val dst = sys.env.get("SPARK_GRAFT_SEED_DIR") match {
       case Some(d) => d // measure this dir as-is (topology comparisons)

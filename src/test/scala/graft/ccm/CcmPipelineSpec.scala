@@ -77,4 +77,45 @@ class CcmPipelineSpec extends SparkTestBase {
       CcmLocal.crossMap(ys, xs, spec.copy(libSizes = Some(Seq(40))), 1L).results.head._2
     assert(math.abs(df(40) - local) < 1e-9)
   }
+
+  test("perSeries fails fast on a series longer than maxPoints") {
+    val err = intercept[org.apache.spark.SparkException] {
+      Ccm.perSeries(wide, spec, Some(Seq(20)), maxPoints = 50).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("exceeds maxPoints=50")), err.getMessage)
+  }
+
+  /** Raw double bits, so row equality is full precision. */
+  private def bits(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case v => v
+    }).sortBy(_.mkString(","))
+
+  test("embeddedBoth equals the two embedded directions, unioned, bit for bit") {
+    val (xs, ys) = Generators.coupledLogisticMaps(30, 0.3)
+    val logistic = xs.indices.map(i => (1L, i.toLong, xs(i), ys(i)))
+    // 0.1-quantised: distance ties and repeated values
+    val ties = logistic.map { case (_, i, x, y) => (2L, i, math.round(x * 10) / 10.0, math.round(y * 10) / 10.0) }
+    // shorter than (E-1)τ+1 for every E = 3 case: no full point
+    val short = Seq((3L, 0L, 0.1, 0.2), (3L, 1L, 0.3, 0.4))
+    val df = (logistic ++ ties ++ short).toDF("skey", "ord", "x", "y")
+    val keys = Seq("skey")
+    val ord = Seq($"ord")
+    for (e <- Seq(1, 3); tau <- Seq(1, 2)) {
+      val got = CcmPipeline.embeddedBoth(df, keys, ord, $"x", $"y", e, tau)
+      val want = CcmPipeline
+        .embedded(df, keys, ord, $"y", $"x", e, tau)
+        .withColumn("direction", lit(Ccm.DirXCausesY))
+        .unionByName(
+          CcmPipeline.embedded(df, keys, ord, $"x", $"y", e, tau).withColumn("direction", lit(Ccm.DirYCausesX))
+        )
+      assert(got.columns.toSeq == want.columns.toSeq)
+      val (g, w) = (bits(got), bits(want))
+      assert(g.nonEmpty && g == w, s"E=$e τ=$tau: embeddedBoth diverged from the two-branch union")
+      val shortRows = g.count(_.head == 3L)
+      assert(shortRows == (if (e == 1) 4 else 0), s"E=$e τ=$tau: short series gave $shortRows rows")
+    }
+  }
 }

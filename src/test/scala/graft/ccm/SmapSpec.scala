@@ -159,4 +159,69 @@ class SmapSpec extends SparkTestBase {
       assert(res((3L, "y_causes_x", t))._1 == -1.0, "leave-one-out mean must be perfectly anti-correlated")
     }
   }
+
+  /** Plain-Scala E=1 S-map at one θ, the contract of [[Smap.coeffs]]: per
+    * direction and target t (1-based), leave-one-out pairs over the other
+    * points, d̄ = mean |src_i - src_t|, w_i = exp(-θ·d_i/d̄) (1 when
+    * d̄ = 0), the five weighted sums, slope 0 when |den| <= 1e-12, both
+    * outputs rounded half-up to 6 dp.
+    */
+  private def coeffsBruteForce(xs: Array[Double], ys: Array[Double], theta: Double) = {
+    def round6(v: Double): Double =
+      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0
+    def oneDir(src: Array[Double], tgt: Array[Double], dir: String) =
+      src.indices.map { t =>
+        val lib = src.indices.filter(_ != t)
+        val d = lib.map(i => math.abs(src(i) - src(t)))
+        val dbar = d.sum / d.size
+        val w = d.map(di => if (dbar > 0.0) math.exp((-theta * di) / dbar) else 1.0)
+        val sw = w.sum
+        val swx = lib.indices.map(j => w(j) * src(lib(j))).sum
+        val swy = lib.indices.map(j => w(j) * tgt(lib(j))).sum
+        val swxx = lib.indices.map(j => w(j) * src(lib(j)) * src(lib(j))).sum
+        val swxy = lib.indices.map(j => w(j) * src(lib(j)) * tgt(lib(j))).sum
+        val den = sw * swxx - swx * swx
+        val bc = if (math.abs(den) > 1e-12) (sw * swxy - swx * swy) / den else 0.0
+        val pred = (swy - bc * swx) / sw + bc * src(t)
+        (dir, t + 1L) -> (tgt(t), round6(bc), round6(pred))
+      }
+    (oneDir(ys, xs, Ccm.DirXCausesY) ++ oneDir(xs, ys, Ccm.DirYCausesX)).toMap
+  }
+
+  private def runCoeffs(xs: Array[Double], ys: Array[Double], theta: Double) = {
+    import spark.implicits._
+    val df = xs.indices.map(i => (5L, i.toLong, xs(i), ys(i))).toDF("skey", "ord", "x", "y")
+    val rows = Smap.coeffs(df, col("skey"), Seq("ord"), col("x"), col("y"), theta).collect()
+    assert(rows.forall(_.getLong(0) == 5L))
+    rows
+      .map(r => (r.getString(1), r.getLong(2)) -> (r.getDouble(3), r.getDouble(4), r.getDouble(5)))
+      .toMap
+  }
+
+  test("coeffs equals a plain E=1 S-map on coupled logistic maps, after the 6-dp round") {
+    val (xs, ys) = Generators.coupledLogisticMaps(40, 0.2)
+    for (theta <- Seq(0.0, 2.0)) {
+      val got = runCoeffs(xs, ys, theta)
+      val want = coeffsBruteForce(xs, ys, theta)
+      assert(got.size == 2 * xs.length)
+      assert(got == want, s"θ=$theta: coeffs diverged from the brute force")
+      assert(got.values.exists(_._2 != 0.0), s"θ=$theta: every slope is 0")
+    }
+  }
+
+  test("coeffs on a constant source: uniform weights, singular matrix, slope 0") {
+    // x constant: in y_causes_x (source x) every distance is 0, so d̄ = 0
+    // selects uniform weights, and den = sw·swxx − swx² = 0 exactly, so
+    // the slope drops and pred is the leave-one-out mean of y
+    val xs = Array.fill(25)(0.5)
+    val ys = Array.tabulate(25)(i => math.sin(0.7 * i))
+    val got = runCoeffs(xs, ys, 2.0)
+    assert(got == coeffsBruteForce(xs, ys, 2.0))
+    val s = ys.sum
+    for (t <- ys.indices) {
+      val (tg, slope, pred) = got((Ccm.DirYCausesX, t + 1L))
+      assert(tg == ys(t) && slope == 0.0)
+      assert(math.abs(pred - (s - ys(t)) / (ys.length - 1)) < 1e-6, s"t=$t: pred $pred")
+    }
+  }
 }
