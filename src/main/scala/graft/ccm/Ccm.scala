@@ -1,23 +1,29 @@
 package graft.ccm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 /** User-facing CCM API mirroring the reference's three entry points
   * (`CCM.new/3`, `CCM.cross_map/2`, `CCM.bidirectional_ccm/1`,
   * `lib/ccm.ex:20-84`), lifted to many series at once.
   *
-  * Two execution strategies, identical semantics:
+  * One execution strategy serves both distributed entry points,
+  * [[bidirectional]] and [[perSeries]]: ONE shuffle places each series in
+  * one partition (repartition by series key), a sort within the partition
+  * lays every series out as one run in time order, and a scan hands each
+  * run to the [[CcmLocal]] kernel — all further work is partition-local,
+  * with no pair-join materialization. The declarative [[CcmPipeline]]
+  * stays the relational form of the same operators (the oracle SQL
+  * mirrors it) and is reached through its own functions.
   *
-  *  - [[bidirectional]]: fully declarative [[CcmPipeline]] — one lazy DAG
-  *    over all (series x direction x libSize x sample) cells; Catalyst
-  *    plans the shuffles; oracle-checkable as SQL.
-  *
-  *  - [[perSeries]]: scale path for many independent series — ONE shuffle
-  *    (groupByKey on the series id) then the [[CcmLocal]] kernel runs
-  *    partition-local per series with zero further data movement. At 100 TB
-  *    / millions of series this is embarrassingly parallel and avoids the
-  *    pair-join materialization entirely.
+  * Input contract, checked by the scan and failing the job with an
+  * `IllegalArgumentException` that names the series: the series key is
+  * never null, x and y are never null or NaN, and the order columns are
+  * unique within a series (a tied
+  * order would make the result depend on physical row order). A series
+  * with fewer than (E-1)τ+1 points has no embedding point and yields no
+  * rows; a constant series yields rho 0.0 to ulps (the zero-variance
+  * rule, `lib/ccm.ex:212`).
   */
 object Ccm {
 
@@ -32,8 +38,6 @@ object Ccm {
       slope: Double,
       convergent: Boolean
   )
-
-  private[ccm] final case class WidePoint(skey: Long, ord: Long, x: Double, y: Double)
 
   val DirXCausesY = "x_causes_y"
   val DirYCausesX = "y_causes_x"
@@ -58,11 +62,16 @@ object Ccm {
   private[ccm] def wide(df: DataFrame, skey: Column, order: Seq[String], x: Column, y: Column): DataFrame =
     df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
 
-  /** Declarative bidirectional CCM over a wide DataFrame of many series.
+  private val DefaultMaxPoints = 1 << 20
+
+  /** Bidirectional CCM over a wide DataFrame of many series.
+    *
+    * Each series is held in one task, at most 2^20 points (the
+    * [[perSeries]] `maxPoints` default); a longer series fails the job.
     *
     * @param df     input with one row per time step
     * @param skey   numeric series key column
-    * @param order  ordering columns (time)
+    * @param order  ordering columns (time), unique within a series
     * @param x      X series values
     * @param y      Y series values
     * @return (skey, direction, lib_size, rho, slope, convergent)
@@ -75,61 +84,16 @@ object Ccm {
       y: Column,
       spec: CcmSpec,
       libSizes: Seq[Int]
-  ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val base = wide(df, skey, order, x, y)
-    val ord = order.map(col)
-    // Direction trap (`lib/ccm.ex:49-53`): x_causes_y embeds Y, targets X
-    // — the [[Directions]] table, which [[CcmPipeline.embeddedBoth]]
-    // turns into both directions' embeddings in a single window pass
-    // (round 17; the former two-branch union sorted and windowed the
-    // shared base twice).
-    val emb = CcmPipeline.embeddedBoth(base, Seq("skey"), ord, $"x", $"y", spec.embeddingDim, spec.tau)
-    val keys = Seq("skey", "direction")
-    // localCheckpoint: the ranked relation feeds BOTH sides of the kNN
-    // self-join (plus the n_pts guard subquery) — ReuseExchange dedupes
-    // only the shuffle below the rank window, so without materialization
-    // the hash-rank window itself runs once per consumer. At cluster
-    // scale the equivalent is persisting the ranked table once.
-    val rk = CcmPipeline
-      .ranked(emb, keys, spec.numSamples, spec.seed, col("skey"), spec.consecutive)
-      .localCheckpoint()
-    val sk =
-      CcmPipeline.skill(
-        rk,
-        keys,
-        libSizes,
-        spec.numSamples,
-        spec.embeddingDim,
-        spec.knnBuckets,
-        spec.knnAutoFactor,
-        spec.reuseDistances,
-        spec.fusedTopK
-      )
-    // Convergence as a WINDOW aggregate over the skill rows (identical values
-    // to the groupBy form in [[CcmPipeline.convergence]]) — a join against a
-    // convergence subquery would make Spark execute the whole skill subtree
-    // twice; the window keeps it a single pass.
-    val wd = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
-    val perRow = sk
-      .withColumn("slope_raw", regr_slope($"rho", $"lib_size".cast("double")).over(wd))
-      .withColumn("n_sizes", count(lit(1)).over(wd))
-    CcmPipeline.withConvergence(perRow, "slope_raw", "n_sizes").drop("slope_raw", "n_sizes")
-  }
+  ): DataFrame =
+    bySeries(wide(df, skey, order, x.cast("double"), y.cast("double")), order, spec, Some(libSizes), DefaultMaxPoints)
+      .toDF()
 
-  /** Scale path: one shuffle to co-locate each series, then the local kernel.
-    * Input columns: (skey: Long, ord: Long, x: Double, y: Double).
+  /** [[bidirectional]] over fixed columns (skey, ord: Long, x, y), with an
+    * optional ladder (default: each series' own auto-ladder,
+    * `lib/ccm.ex:86-97`).
     *
-    * `CcmSpec.knnBuckets > 0` enables the same approximate-kNN candidate
-    * pruning as the declarative path, with BIT-IDENTICAL bucket semantics
-    * ([[CcmLocal]] e0Buckets — `ccm_wide_approx_perseries` shares
-    * `ccm_wide_approx`'s oracle verbatim): each prediction point scans
-    * only library rows within ±1 e0 grid bucket instead of the whole
-    * library, cutting the kernel's O(n·lib) distance work per sample.
-    *
-    * @param maxPoints each series is materialized in ONE task's heap
-    *        (~32 bytes/point), so a runaway series would OOM the executor;
+    * @param maxPoints each series is materialized in ONE task's heap (two
+    *        doubles per point), so a runaway series would OOM the executor;
     *        series longer than this fail fast with a clear message instead.
     *        CCM cost is O(n^2) per series anyway — resample long series
     *        down rather than raising the cap.
@@ -138,41 +102,71 @@ object Ccm {
       df: DataFrame,
       spec: CcmSpec,
       libSizes: Option[Seq[Int]] = None,
-      maxPoints: Int = 1 << 20
+      maxPoints: Int = DefaultMaxPoints
   ): Dataset[SkillRow] = {
-    val spark = df.sparkSession
+    val in = wide(df, col("skey"), Seq("ord"), col("x").cast("double"), col("y").cast("double"))
+    bySeries(in.withColumn("ord", col("ord").cast("long")), Seq("ord"), spec, libSizes, maxPoints)
+  }
+
+  /** The one runner, over [[wide]]'s shape with x, y double: repartition
+    * by skey at the session's shuffle width (an explicit count, so AQE
+    * does not coalesce it — the same knob [[CcmPipeline.predictions]]
+    * pins) → sort within partitions by (skey, order...) → scan each run of
+    * equal skey into two arrays → [[CcmLocal.bidirectional]].
+    */
+  private[ccm] def bySeries(
+      in: DataFrame, order: Seq[String], spec: CcmSpec, libSizes: Option[Seq[Int]], maxPoints: Int
+  ): Dataset[SkillRow] = {
+    val spark = in.sparkSession
     import spark.implicits._
-    df.select(
-        col("skey").cast("long").as("skey"),
-        col("ord").cast("long").as("ord"),
-        col("x").cast("double").as("x"),
-        col("y").cast("double").as("y")
-      )
-      .as[WidePoint]
-      .groupByKey(_.skey)
-      .flatMapGroups { (skey, it) =>
-        val buf = scala.collection.mutable.ArrayBuffer.empty[WidePoint]
-        var over = false
-        while (it.hasNext && !over) {
-          buf += it.next()
-          if (buf.length > maxPoints) over = true
+    val width = 3 + order.size
+    val sp = libSizes.fold(spec)(ls => spec.copy(libSizes = Some(ls)))
+    in.repartition(spark.sessionState.conf.numShufflePartitions, col("skey"))
+      .sortWithinPartitions((col("skey") +: order.map(col)): _*)
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+          // nulls sort first, so a null key always starts a run
+          if (it.head.isNullAt(0)) throw new IllegalArgumentException("null series key")
+          val key = it.head.getLong(0)
+          val xs = new scala.collection.mutable.ArrayBuilder.ofDouble
+          val ys = new scala.collection.mutable.ArrayBuilder.ofDouble
+          var n = 0
+          var prev: Row = null
+          while (it.hasNext && it.head.getLong(0) == key) {
+            val r = it.next()
+            n += 1
+            if (n > maxPoints)
+              throw new IllegalArgumentException(
+                s"series $key exceeds maxPoints=$maxPoints; resample it or raise the cap (each series is held in one task)"
+              )
+            xs += finite(r, 1, "x", key)
+            ys += finite(r, 2, "y", key)
+            if (prev != null && (3 until width).forall(i => prev.get(i) == r.get(i)))
+              throw new IllegalArgumentException(
+                s"series $key repeats the order value ${(3 until width).map(r.get).mkString("(", ", ", ")")}; " +
+                  "the order columns must be unique within a series"
+              )
+            prev = r
+          }
+          // no embedding point (fewer than (E-1)τ+1 points): no rows
+          if (spec.maxLibSize(n) < 1) Nil
+          else {
+            val res = CcmLocal.bidirectional(xs.result(), ys.result(), sp, key)
+            def rows(d: CcmLocal.DirectionResult, name: String) = {
+              val slope = CcmLocal.olsSlope(d.results)
+              d.results.map { case (l, rho) => SkillRow(key, name, l, rho, slope, d.convergent) }
+            }
+            rows(res.xCausesY, DirXCausesY) ++ rows(res.yCausesX, DirYCausesX)
+          }
         }
-        if (over)
-          throw new IllegalArgumentException(
-            s"series $skey exceeds maxPoints=$maxPoints; resample it or raise the cap (perSeries holds one series per task)"
-          )
-        val pts = buf.toArray.sortBy(_.ord)
-        val xs = pts.map(_.x)
-        val ys = pts.map(_.y)
-        val ls = libSizes.getOrElse(spec.resolvedLibSizes(xs.length))
-        val sp = spec.copy(libSizes = Some(ls))
-        val res = CcmLocal.bidirectional(xs, ys, sp, skey)
-        def rows(d: CcmLocal.DirectionResult, name: String) = {
-          val slope = CcmLocal.olsSlope(d.results)
-          d.results.map { case (l, rho) => SkillRow(skey, name, l, rho, slope, d.convergent) }
-        }
-        rows(res.xCausesY, DirXCausesY) ++ rows(res.yCausesX, DirYCausesX)
       }
+  }
+
+  private def finite(r: Row, i: Int, name: String, key: Long): Double = {
+    val v = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+    if (v.isNaN) throw new IllegalArgumentException(s"series $key has a null or NaN $name value")
+    v
   }
 
   /** Single-pair convenience mirroring `CCM.bidirectional_ccm/1` exactly:

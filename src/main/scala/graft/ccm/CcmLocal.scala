@@ -6,8 +6,9 @@ package graft.ccm
   * unseeded `Enum.take_random` (`lib/ccm.ex:117`).
   *
   * Two roles:
-  *   1. the per-series kernel for the distributed scale path
-  *      ([[Ccm.perSeries]] runs it inside `mapGroups`, so millions of
+  *   1. the per-series kernel behind the distributed API
+  *      ([[Ccm.bidirectional]] and [[Ccm.perSeries]] run it over each
+  *      series' sorted run inside `mapPartitions`, so millions of
   *      independent series compute locally after a single shuffle);
   *   2. the executable spec that the DataFrame pipeline ([[CcmPipeline]])
   *      and the DuckDB oracle SQL are tested against.
@@ -107,7 +108,7 @@ object CcmLocal {
 
   /** Closed-form OLS slope of corr on libSize; 0.0 when degenerate
     * (< 2 points or zero denominator). Shared by the convergence test and
-    * by [[graft.ccm.Ccm.perSeries]]'s reported slope so the two can never
+    * by the [[graft.ccm.Ccm]] API's reported slope so the two can never
     * drift apart.
     */
   def olsSlope(results: Seq[(Int, Double)]): Double = {

@@ -29,9 +29,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): all shuffles key on the series id, so work
   * distributes across series; the per-series pair fan-out is the algorithm's
-  * intrinsic cost. For very many series prefer [[Ccm.perSeries]] (single
-  * shuffle, then partition-local kernel); this pipeline is the fully
-  * declarative equivalent and the oracle surface.
+  * intrinsic cost. The [[Ccm]] API does not run this pipeline: it places
+  * each series once and runs the [[CcmLocal]] kernel partition-local.
+  * This pipeline is the relational form of the same operators — the
+  * oracle SQL mirrors it, and the layer-exposing queries call it.
   */
 object CcmPipeline {
 
@@ -260,8 +261,8 @@ object CcmPipeline {
     // SOME sample only if min_s rank <= maxLib; a query point only if
     // max_s rank > minLib). Output rows are identical to exactPairs —
     // same distance expression over the same doubles, same membership
-    // predicates — so both paths share one oracle. Measured OUTCOME
-    // (graft.tools.BootProbe, S=8/32, libs far from and near n): 1.1-1.5x
+    // predicates (ReuseDistancesSpec). Measured OUTCOME
+    // (graft.tools.BootProbe at bb7fe5f, S=8/32, libs near/far n): 1.1-1.5x
     // slower than recomputing — candidate-row enumeration (S·n per cell
     // through join or generator, identical in both paths) dominates, the
     // E-dim distance is ~free inside whole-stage codegen, and this path
@@ -526,31 +527,20 @@ object CcmPipeline {
       )
   }
 
-  /** Convergence per series: OLS slope of rho on lib_size, strictly > 0.001,
-    * false when < 3 lib sizes or degenerate (`lib/ccm.ex:215-244`).
+  /** Convergence per series: OLS slope of rho on lib_size; `convergent` =
+    * at least 3 lib sizes and a non-null, non-NaN slope strictly > 0.001,
+    * `slope` = the raw slope with null → 0.0 (`lib/ccm.ex:215-244`).
     */
   def convergence(skillDf: DataFrame, keys: Seq[String]): DataFrame = {
     val spark = skillDf.sparkSession
     import spark.implicits._
-    val grouped = skillDf
+    skillDf
       .groupBy(keys.map(col): _*)
       .agg(
         regr_slope($"rho", $"lib_size".cast("double")).as("slope"),
         count(lit(1)).as("n_sizes")
       )
-    withConvergence(grouped, "slope", "n_sizes")
-  }
-
-  /** The convergence flag and reported slope from a per-series OLS slope
-    * column and lib-size count column: `convergent` = at least 3 lib sizes
-    * and a non-null, non-NaN slope strictly > 0.001 (`lib/ccm.ex:215-244`);
-    * `slope` = the raw slope with null → 0.0. The one definition both
-    * [[convergence]] (groupBy form) and [[Ccm.bidirectional]] (window form)
-    * use.
-    */
-  def withConvergence(df: DataFrame, slope: String, nSizes: String): DataFrame = {
-    val s = col(slope)
-    df.withColumn("convergent", col(nSizes) >= 3 && s.isNotNull && !isnan(s) && s > 0.001)
-      .withColumn("slope", coalesce(s, lit(0.0)))
+      .withColumn("convergent", $"n_sizes" >= 3 && $"slope".isNotNull && !isnan($"slope") && $"slope" > 0.001)
+      .withColumn("slope", coalesce($"slope", lit(0.0)))
   }
 }

@@ -15,7 +15,9 @@ package graft.ccm
   * approximate candidate path — each embedding row is grid-bucketed along
   * `e0` AND `e{E-1}` (a compound two-axis key; one axis when E = 1) into
   * `knnBuckets` per-series buckets per axis and the kNN join probes only
-  * the query's bucket ±1 on each axis (see [[CcmPipeline.predictions]]).
+  * the query's bucket ±1 on each axis. Both execution forms honour it
+  * with bit-identical buckets: the [[CcmLocal]] kernel behind the [[Ccm]]
+  * API and the declarative [[CcmPipeline.predictions]].
   * Deterministic (bucket edges derive from per-series min/max, not RNG),
   * so still oracle-checkable; candidate count per query point drops from
   * the whole library to the ~(3/knnBuckets)² fraction within one bucket
@@ -38,31 +40,33 @@ package graft.ccm
   * (q_idx, l_idx) distance is evaluated once per series, with
   * per-sample library membership expanded afterwards from per-point
   * rank arrays (zero extra shuffles). Value-identical to the default
-  * path (same expression, same membership predicates; ccm_boot /
-  * ccm_boot_reuse share one oracle). MEASURED NEGATIVE on this engine
-  * and kept opt-in as documentation: the reference's flop-count
-  * argument (Θ(S·B·n²) distance evaluations, SURVEY §4) does not
-  * transfer to a columnar codegen engine — both paths enumerate
+  * path (same expression, same membership predicates). MEASURED
+  * NEGATIVE on this engine and kept opt-in as documentation: the
+  * reference's flop-count argument (Θ(S·B·n²) distance evaluations,
+  * SURVEY §4) does not transfer to a columnar codegen engine — both paths enumerate
   * S·n-per-cell candidate rows through the join/generator, a 3-dim
   * distance is ~free inside whole-stage codegen, and the reuse path
   * additionally carries two S-element rank arrays through every
   * generated row (probed 1.1-1.5x SLOWER at S=8/32, libs both far
-  * from and near n — graft.tools.BootProbe). What actually pays at
-  * scale is candidate-count reduction (`knnBuckets`), not arithmetic
-  * reuse. Exact path only (ignored when knnBuckets > 0).
+  * from and near n — graft.tools.BootProbe, at commit bb7fe5f). What
+  * actually pays at scale is candidate-count reduction (`knnBuckets`),
+  * not arithmetic reuse. Exact path only (ignored when knnBuckets > 0).
   *
   * `fusedTopK` (SURVEY §4 item 1): replace the kNN tail's
   * window-topk → window-min → groupBy chain with the single
   * [[FusedKnn]] `Aggregator` (one exchange, no sort, k-capped partial
-  * buffers). Value-identical to the window tail (ccm_boot /
-  * ccm_boot_fused share one oracle). MEASURED MIXED
-  * (graft.tools.FusedProbe): LOSES 1.4-1.7x in the bootstrap-heavy
-  * regime (S=8, 66-pt series — many tiny groups, where the
+  * buffers). Value-identical to the window tail. MEASURED MIXED
+  * (graft.tools.FusedProbe, at commit bb7fe5f): LOSES 1.4-1.7x in the
+  * bootstrap-heavy regime (S=8, 66-pt series — many tiny groups, where the
   * per-row encoder boundary of a TypedImperativeAggregate costs more
   * than the codegen'd sort it removes) and WINS ~10-25% on long
   * series with few samples (1 260-pt series — the pair relation per
   * group is large, so the saved sort + second exchange dominate).
   * Off by default; turn on for the long-series regime.
+  *
+  * `reuseDistances` and `fusedTopK` shape the declarative pair join
+  * ([[CcmPipeline.predictions]] / [[CcmPipeline.skill]]) only; the
+  * [[Ccm]] API's kernel ignores them.
   *
   * `consecutive` (README-parity mode): the reference's README describes
   * libraries as "L consecutive slices of the training set … each slice

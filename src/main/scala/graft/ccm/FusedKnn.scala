@@ -40,7 +40,7 @@ final case class NNBuf(k: Int, n: Int, dists: Array[Double], idxs: Array[Long], 
   * the update path is an encoder boundary per row (no whole-stage codegen),
   * whereas the window tail is fully codegen'd end to end.
   *
-  * Measured verdict (graft.tools.FusedProbe, local[32], sf0.1 events):
+  * Measured verdict (graft.tools.FusedProbe at commit bb7fe5f, local[32], sf0.1 events):
   * bootstrap-heavy (S=8, 66-pt series, libs 16/32/48) the fused tail is
   * 1.4-1.7x SLOWER — the relation is dominated by group COUNT, not group
   * size, so the saved sort is small while every row pays the encoder

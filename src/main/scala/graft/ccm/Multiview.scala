@@ -99,23 +99,21 @@ object Multiview {
       )
       .withColumn("pred", Knn.predicted(col("sw"), col("swx")))
       .localCheckpoint() // consumed by the view ranking AND the mv average
-    val viewSkill = preds
-      .groupBy("skey", "view")
-      .agg(round(coalesce(corr(col("actual"), col("pred")), lit(0.0)), 6).as("rho6"))
+    val viewSkill = Knn
+      .guardedRho(preds.groupBy("skey", "view"), col("actual"), col("pred"))
+      .select(col("skey"), col("view"), col("rho").as("rho6"))
       .withColumn(
         "vrk",
         row_number().over(Window.partitionBy("skey").orderBy(col("rho6").desc, col("view").asc))
       )
     val top = viewSkill.filter(col("vrk") <= topViews)
-    val mv = preds
+    val mvPreds = preds
       .join(top.select("skey", "view"), Seq("skey", "view"))
       .groupBy("skey", "q_idx")
       .agg(first(col("actual")).as("actual"), avg(col("pred")).as("mv_pred"))
-      .groupBy("skey")
-      .agg(
-        count(lit(1)).as("n_pts"),
-        round(coalesce(corr(col("actual"), col("mv_pred")), lit(0.0)), 6).as("mv_rho")
-      )
+    val mv = Knn
+      .guardedRho(mvPreds.groupBy("skey"), col("actual"), col("mv_pred"), count(lit(1)).as("n_pts"))
+      .withColumnRenamed("rho", "mv_rho")
     val summary = top
       .groupBy("skey")
       .agg(

@@ -181,8 +181,9 @@ object CcmQueries {
   private def knnPredict(s: SparkSession, dir: String): DataFrame = {
     val sub = ev(s, dir).filter(col("user_id") % 5 === 0)
     val emb = CcmPipeline.embedded(sub, Seq("user_id"), Seq(col("ts")), col("value"), col("value"), 3, 1)
-    // localCheckpoint: rk feeds both sides of the kNN self-join (see
-    // Ccm.bidirectional for the rationale)
+    // localCheckpoint: rk feeds both sides of the kNN self-join, and
+    // ReuseExchange dedupes only the shuffle below the rank window, so
+    // without it the hash-rank window runs once per consumer
     val rk = CcmPipeline.ranked(emb, Seq("user_id"), 2, Seed, col("user_id")).localCheckpoint()
     CcmPipeline
       // orderFreeFold: this gate publishes the per-point prediction
@@ -324,12 +325,12 @@ object CcmQueries {
   private def curveApprox(s: SparkSession, dir: String): DataFrame =
     curveWith(s, dir, ApproxBuckets)
 
-  // ccm_curve_perseries — the SAME workload as ccm_curve executed through
-  // the 100 TB scale path: Ccm.perSeries (one groupByKey shuffle, then the
-  // CcmLocal kernel runs partition-local per series). It shares ccm_curve's
-  // oracle SQL VERBATIM, so the hash gate proves the two execution
-  // strategies — fully declarative Catalyst plan vs partition-local
-  // kernel — are value-identical to each other and to DuckDB.
+  // ccm_curve_perseries — the SAME workload as ccm_curve through the
+  // Ccm.perSeries entry point (fixed (skey, ord, x, y) columns, ord cast
+  // to long). Both entry points run one path (one shuffle by series, then
+  // the CcmLocal kernel partition-local per series), so this twin checks
+  // the perSeries column contract against ccm_curve's oracle SQL, which
+  // it shares VERBATIM.
   private def curvePerSeries(s: SparkSession, dir: String): DataFrame = {
     val in = curveInput(s, dir)
       .select(col("user_id").as("skey"), col("ts").as("ord"), col("x"), col("y"))
@@ -597,11 +598,11 @@ object CcmQueries {
     wideWith(s, dir, WideBuckets)
 
   // ccm_wide_approx_perseries — the SAME wide approximate workload through
-  // the Ccm.perSeries scale path: the CcmLocal kernel's bucket pruning
-  // must be bit-identical to the declarative bucket join, so this shares
-  // ccm_wide_approx's oracle VERBATIM (kernel ≡ declarative ≡ DuckDB).
-  // ord = per-series row_number over the (ts, user_id) total order (the
-  // composite order folded to the single Long ordinal perSeries expects).
+  // the Ccm.perSeries entry point, sharing ccm_wide_approx's oracle
+  // VERBATIM. Both entry points run the CcmLocal kernel, so this twin
+  // checks the perSeries column contract: ord = per-series row_number
+  // over the (ts, user_id) total order (the composite order folded to
+  // the single Long ordinal perSeries expects).
   private def wideApproxPerSeries(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("skey")).orderBy(col("ts"), col("user_id"))
     val in = wideInput(s, dir)
@@ -704,13 +705,12 @@ object CcmQueries {
   // the auto-ladder reaching the full series length) that motivated
   // distance-reuse across samples (SURVEY §4 item 2,
   // CcmSpec.reuseDistances). Series are capped at BootCap points so the
-  // workload sits in the heavy-library-overlap regime at every SF. Both
-  // entries produce identical values — ccm_boot runs the per-sample
-  // exact join, ccm_boot_reuse the factored pair-distance relation —
-  // and share one oracle, so the hash compare is the equality proof
-  // and the bench delta the honest measurement: reuse is the SLOWER
-  // path on this engine (see CcmSpec.reuseDistances scaladoc for why),
-  // and the pair documents that finding per-round.
+  // workload sits in the heavy-library-overlap regime at every SF. The
+  // two entries share one oracle. Ccm.bidirectional runs the CcmLocal
+  // kernel, which ignores reuseDistances, so ccm_boot_reuse now runs
+  // ccm_boot's path; the reuse relation itself is checked by
+  // ReuseDistancesSpec (CcmSpec.reuseDistances scaladoc: it measured
+  // SLOWER in the declarative plan). Retiring the twin is ROADMAP H.
   // -------------------------------------------------------------------
   private val BootSamples = 8
   private val BootLibs = Seq(16, 32, 48)
@@ -762,10 +762,11 @@ object CcmQueries {
   private def bootReuse(s: SparkSession, dir: String): DataFrame =
     bootWith(s, dir, bootSpec.copy(reuseDistances = true))
 
-  // ccm_boot_fused — same workload through the FusedKnn aggregate tail
-  // (SURVEY §4 item 1, CcmSpec.fusedTopK): third member of the shared-
-  // oracle family; the hash compare proves value equality with the
-  // window tail, the bench delta is the per-round measurement.
+  // ccm_boot_fused — same workload with CcmSpec.fusedTopK (the FusedKnn
+  // aggregate tail, SURVEY §4 item 1): third member of the shared-oracle
+  // family. Like ccm_boot_reuse it now runs ccm_boot's kernel path, as
+  // the flag shapes only the declarative pair join (FusedKnnSpec checks
+  // that tail); retiring it is ROADMAP H.
   private def bootFused(s: SparkSession, dir: String): DataFrame =
     bootWith(s, dir, bootSpec.copy(fusedTopK = true))
 
@@ -906,8 +907,8 @@ object CcmQueries {
   // The comparison uses the 6-dp-rounded rhos on both engines (raw
   // float compare at a tie boundary could split them).
   // Scale: surrogates multiply the SERIES dimension (K+1 variants),
-  // which the pair join already partitions on — same shuffle keys,
-  // (K+1)× rows, no new plan shape.
+  // which Ccm.bidirectional already partitions on — same shuffle key,
+  // (K+1)× series, no new plan shape.
   // -------------------------------------------------------------------
   private val SurrK = 7
   private val SurrStride = 100L
@@ -1677,12 +1678,10 @@ object CcmQueries {
 
   // ccm_convergence — convergent?/1 (C10) as its own surface: OLS slope of
   // the skill curve, strict > 0.001, <3 sizes -> false (`lib/ccm.ex:215-244`).
-  // Routed through the perSeries scale path (the strategy a convergence-only
-  // call should use: it reduces each series to two rows, so recomputing the
-  // declarative pair-join DAG for it is pure waste). The declarative
-  // regr_slope surface stays verified by ccm_curve's slope column and the
-  // flagship entry(); curve vs curve_perseries pins the two strategies
-  // value-identical on this very workload.
+  // Routed through Ccm.perSeries on ccm_curve's input; the kernel's OLS
+  // slope (CcmLocal.olsSlope) is what this oracle checks. The declarative
+  // regr_slope form (CcmPipeline.convergence) is held to the kernel by
+  // CcmPipelineSpec.
   private def convergenceQ(s: SparkSession, dir: String): DataFrame = {
     val in = curveInput(s, dir)
       .select(col("user_id").as("skey"), col("ts").as("ord"), col("x"), col("y"))

@@ -29,7 +29,7 @@ class ApproxKnnSpec extends SparkTestBase {
   }
 
   private def run(knnBuckets: Int, knnAutoFactor: Int = 0) =
-    Ccm
+    Declarative
       .bidirectional(
         inputDf,
         skey = col("skey"),

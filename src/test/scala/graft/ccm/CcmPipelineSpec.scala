@@ -1,6 +1,7 @@
 package graft.ccm
 
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The DataFrame pipeline must produce the same numbers as the pure-Scala
@@ -26,7 +27,7 @@ class CcmPipelineSpec extends SparkTestBase {
   }
 
   test("pipeline skill+convergence matches local kernel on all series and directions") {
-    val df = Ccm
+    val df = Declarative
       .bidirectional(wide, $"skey", Seq("ord"), $"x", $"y", spec, libSizes)
       .collect()
       .map(r =>
@@ -62,7 +63,7 @@ class CcmPipelineSpec extends SparkTestBase {
     val one = wide.filter($"skey" === 1L)
     // embedding rows n = 80 - 2 = 78; lib 78 triggers the guard, lib 77
     // leaves 1 prediction point -> corr over 1 pair -> 0.0 as well
-    val df = Ccm
+    val df = Declarative
       .bidirectional(one, $"skey", Seq("ord"), $"x", $"y", spec, Seq(40, 77, 78))
       .filter($"direction" === Ccm.DirXCausesY)
       .select($"lib_size", $"rho")
@@ -84,6 +85,65 @@ class CcmPipelineSpec extends SparkTestBase {
     }
     val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
     assert(msgs.exists(m => m != null && m.contains("exceeds maxPoints=50")), err.getMessage)
+  }
+
+  /** A 200-point coupled pair as series `skey`. */
+  private def pair(skey: Long): DataFrame = {
+    val (xs, ys) = Generators.coupledLogisticMaps(200, 0.3)
+    xs.indices.map(i => (skey, i.toLong, xs(i), ys(i))).toDF("skey", "ord", "x", "y")
+  }
+
+  /** Both APIs over the same (skey, ord, x, y) rows, each collected. */
+  private def bothApis(df: DataFrame): Seq[() => Seq[Row]] = Seq(
+    () => Ccm.bidirectional(df, $"skey", Seq("ord"), $"x", $"y", spec, libSizes).collect().toSeq,
+    () => Ccm.perSeries(df, spec, Some(libSizes)).toDF().collect().toSeq
+  )
+
+  /** Each API fails with an IllegalArgumentException whose message holds `text`. */
+  private def assertRejected(df: DataFrame, text: String): Unit =
+    bothApis(df).foreach { run =>
+      val err = intercept[Exception](run())
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(
+        chain.exists(t => t.isInstanceOf[IllegalArgumentException] && t.getMessage.contains(text)),
+        err.getMessage
+      )
+    }
+
+  test("a null or NaN x or y at t=100 fails both APIs, naming the series") {
+    for (c <- Seq("x", "y"); bad <- Seq(lit(null).cast("double"), lit(Double.NaN)))
+      assertRejected(pair(7L).withColumn(c, when($"ord" === 100L, bad).otherwise(col(c))), "series 7 ")
+  }
+
+  test("a tied order value fails both APIs, naming the series") {
+    assertRejected(pair(9L).withColumn("ord", when($"ord" === 101L, 100L).otherwise($"ord")), "series 9 ")
+  }
+
+  test("a null series key fails both APIs") {
+    assertRejected(pair(4L).withColumn("skey", when($"ord" === 100L, lit(null)).otherwise($"skey")), "null series key")
+  }
+
+  test("a constant series yields rho within 1e-12 of 0.0 from both APIs, exactly 0.0 where it is the target") {
+    // x_causes_y predicts the constant: exactly 0.0. y_causes_x embeds it,
+    // so every query gets the same prediction and the kernel's two-pass
+    // mean leaves ulp-level variance: rho ~1e-17, 0.0 at the 6-dp contract
+    bothApis(pair(3L).withColumn("x", lit(1.5))).foreach { run =>
+      val rows = run()
+      assert(rows.size == 2 * libSizes.size)
+      assert(rows.forall(r => math.abs(r.getAs[Double]("rho")) < 1e-12), rows.mkString("\n"))
+      assert(rows.filter(_.getAs[String]("direction") == Ccm.DirXCausesY).forall(_.getAs[Double]("rho") == 0.0))
+    }
+  }
+
+  test("a series shorter than (E-1)τ+1 points yields no rows from either API") {
+    // E = 3, τ = 1: two points make no embedding point; the 200-point
+    // series beside them still yields its rows
+    val short = Seq((5L, 0L, 0.1, 0.2), (5L, 1L, 0.3, 0.4)).toDF("skey", "ord", "x", "y")
+    bothApis(short.unionByName(pair(6L))).foreach { run =>
+      assert(run().map(_.getAs[Long]("skey")).distinct == Seq(6L))
+    }
+    // perSeries' default ladder: the short series alone
+    assert(Ccm.perSeries(short, spec).collect().isEmpty)
   }
 
   /** Raw double bits, so row equality is full precision. */

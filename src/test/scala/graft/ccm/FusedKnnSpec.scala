@@ -28,7 +28,7 @@ class FusedKnnSpec extends SparkTestBase {
   }
 
   private def run(fused: Boolean) =
-    Ccm
+    Declarative
       .bidirectional(
         inputDf,
         skey = col("skey"),
@@ -62,7 +62,7 @@ class FusedKnnSpec extends SparkTestBase {
     // minLib(3) < E+1(4) forces the least(e+1, lib_size) k column in BOTH
     // tails; results must still agree bit-exactly.
     def runSmall(fused: Boolean) =
-      Ccm
+      Declarative
         .bidirectional(
           inputDf,
           skey = col("skey"),

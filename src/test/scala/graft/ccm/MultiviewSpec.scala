@@ -52,6 +52,12 @@ class MultiviewSpec extends SparkTestBase {
     assert(math.abs(mvRho) < 0.35, s"independent series should have low skill, got $mvRho")
   }
 
+  test("a constant target series yields rho 0.0 instead of a divide-by-zero") {
+    val (_, ys) = Generators.coupledLogisticMaps(100, coupling = 0.3)
+    val (_, _, bestRho, _, mvRho) = run(Array.fill(100)(2.0), ys)(1L)
+    assert(bestRho == 0.0 && mvRho == 0.0, s"best $bestRho, multiview $mvRho")
+  }
+
   test("view ranking is deterministic across repeated runs") {
     val (xs, ys) = Generators.coupledLogisticMaps(120, coupling = 0.3)
     val r1 = run(ys, xs)(1L)

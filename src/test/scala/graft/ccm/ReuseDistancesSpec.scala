@@ -29,7 +29,7 @@ class ReuseDistancesSpec extends SparkTestBase {
   }
 
   private def run(reuse: Boolean) =
-    Ccm
+    Declarative
       .bidirectional(
         inputDf,
         skey = col("skey"),

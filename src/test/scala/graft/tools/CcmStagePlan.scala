@@ -8,9 +8,10 @@ import graft.contract.Tables
 import java.nio.file.{Files, Paths}
 
 /** Explain (and time) the PRE-checkpoint ranked-stage plan of the
-  * bidirectional CCM pipeline — the subtree Bench executes inside the
-  * eager localCheckpoint in `Ccm.bidirectional`, which PlanDump cannot see
-  * (it captures only the post-checkpoint tail). Dumps BOTH embedding
+  * declarative bidirectional CCM chain — the subtree inside the eager
+  * `ranked(...).localCheckpoint()` that `Ccm.bidirectional` ran until
+  * commit bb7fe5f, which PlanDump cannot see (it captures only the
+  * post-checkpoint tail). Dumps BOTH embedding
   * forms so the round-17 structural claim is checkable from files:
   *
   *  - `legacy`  — the pre-r17 shape: one [[CcmPipeline.embedded]] branch
