@@ -36,11 +36,11 @@ object ExtraConf {
   def applyTo(builder: SparkSession.Builder): SparkSession.Builder =
     fromEnv.foldLeft(builder)((b, kv) => b.config(kv._1, kv._2))
 
-  /** The session of the Bench, Verify and Sf1Seed mains: master
-    * `SPARK_GRAFT_MASTER` (default `local[cpus]`), shuffle partitions =
-    * cpus, where cpus is `SPARK_GRAFT_CPUS` or `defaultCpus`; UTC session
-    * time zone, UI off, the `SPARK_GRAFT_SPARK_CONF` pairs on top, and
-    * WARN logging.
+  /** The session of every main that needs one (Bench, Verify, Sf1Seed,
+    * ScaleGen, StreamDemo): master `SPARK_GRAFT_MASTER` (default
+    * `local[cpus]`), shuffle partitions = cpus, where cpus is
+    * `SPARK_GRAFT_CPUS` or `defaultCpus`; UTC session time zone, UI off,
+    * the `SPARK_GRAFT_SPARK_CONF` pairs on top, and WARN logging.
     */
   def session(defaultCpus: Int, appName: Option[String] = None): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * unique within a series (a tied
   * order would make the result depend on physical row order). A series
   * with fewer than (E-1)τ+1 points has no embedding point and yields no
-  * rows; a constant series yields rho 0.0 to ulps (the zero-variance
-  * rule, `lib/ccm.ex:212`).
+  * rows; a constant series yields rho 0.0 (the zero-variance rule,
+  * `lib/ccm.ex:212`).
   */
 object Ccm {
 

@@ -1,12 +1,12 @@
 package graft.ccm
 
-import org.apache.spark.sql.SparkSession
-
 /** G5/G6 demo surface (`sbt "runMain graft.ccm.CcmDemo"`): the reference's
   * `CoupledSeriesGenerator.run/1` walkthrough (reference
   * `lib/coupled_series_generator.ex:107-143`) — seeded generation, first-10
   * preview (G5 `print_series/1`), bidirectional CCM, expected-direction
-  * commentary — on our seeded generator and Spark pipeline.
+  * commentary — on our seeded generator and the local kernel
+  * (`Ccm.bidirectionalLocal`, the single-pair API), so it starts no Spark
+  * session.
   */
 object CcmDemo {
 
@@ -18,13 +18,6 @@ object CcmDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
     // seeded generation, the reference demo's coupling (X drives Y)
     val (xs, ys) = Generators.coupledSeries(200, Generators.CoupledParams(coupling = 0.4, noiseLevel = 0.02))
     printSeries(xs, ys)
@@ -46,6 +39,5 @@ object CcmDemo {
     println("Expected: X causes Y should show convergence (skill rising with library size);")
     println("          Y causes X should not.")
     println("CCM_DEMO_DONE")
-    spark.stop()
   }
 }

@@ -89,21 +89,34 @@ object CcmLocal {
   }
 
   /** Pearson correlation with the reference's degenerate paths
-    * (`lib/ccm.ex:187-213`): < 2 pairs -> 0.0, zero denominator -> 0.0.
+    * (`lib/ccm.ex:187-213`): < 2 pairs -> 0.0, zero variance -> 0.0.
+    * Zero variance is decided on the values themselves (all actuals, or
+    * all predictions, equal), not on the two-pass sums: the mean of n
+    * equal doubles can be off by an ulp, which would leave a variance of
+    * ~1e-34 and a rho of ~1e-17 instead of 0.0.
     */
   def correlation(pairs: Seq[(Double, Double)]): Double = {
     if (pairs.length < 2) return 0.0
     val n = pairs.length
     val aMean = pairs.iterator.map(_._1).sum / n
     val pMean = pairs.iterator.map(_._2).sum / n
+    val a0 = pairs.head._1
+    val p0 = pairs.head._2
     var num = 0.0; var aVar = 0.0; var pVar = 0.0
-    pairs.foreach { case (a, p) =>
+    var aVaries = false; var pVaries = false
+    val it = pairs.iterator
+    while (it.hasNext) {
+      val ap = it.next()
+      val a = ap._1
+      val p = ap._2
       num += (a - aMean) * (p - pMean)
       aVar += (a - aMean) * (a - aMean)
       pVar += (p - pMean) * (p - pMean)
+      aVaries |= a != a0
+      pVaries |= p != p0
     }
     val denom = math.sqrt(aVar * pVar)
-    if (denom != 0.0) num / denom else 0.0
+    if (aVaries && pVaries && denom != 0.0) num / denom else 0.0
   }
 
   /** Closed-form OLS slope of corr on libSize; 0.0 when degenerate

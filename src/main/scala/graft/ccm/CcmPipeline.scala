@@ -395,7 +395,7 @@ object CcmPipeline {
     // Fused tail (SURVEY §4 item 1, see [[FusedKnn]]): one aggregate
     // replaces window-topk + window-min + groupBy — one exchange instead
     // of two, no sort. Values are bit-identical to the window tail below
-    // (ccm_boot_fused shares ccm_boot's oracle as the standing proof).
+    // (FusedKnnSpec is the standing proof).
     if (fusedTopK) {
       val kCol =
         if (minLib >= e + 1) lit(e + 1) else least(lit(e + 1), $"lib_size").cast("int")

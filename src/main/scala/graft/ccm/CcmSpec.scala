@@ -66,7 +66,8 @@ package graft.ccm
   *
   * `reuseDistances` and `fusedTopK` shape the declarative pair join
   * ([[CcmPipeline.predictions]] / [[CcmPipeline.skill]]) only; the
-  * [[Ccm]] API's kernel ignores them.
+  * [[Ccm]] API's kernel ignores them. ReuseDistancesSpec and FusedKnnSpec
+  * are the standing proof that each reproduces the default path.
   *
   * `consecutive` (README-parity mode): the reference's README describes
   * libraries as "L consecutive slices of the training set … each slice

@@ -48,8 +48,8 @@ final case class NNBuf(k: Int, n: Int, dists: Array[Double], idxs: Array[Long], 
   * 10-25% FASTER — per-group pair counts in the hundreds of thousands
   * make the dropped sort + dropped second exchange the larger term.
   * Hence opt-in (`CcmSpec.fusedTopK`), recommended only for the
-  * long-series regime; `ccm_boot` / `ccm_boot_fused` share one oracle
-  * (equality proof) and the bench pair re-records the delta per round.
+  * long-series regime. FusedKnnSpec is the equality proof against the
+  * window tail.
   *
   * Determinism: candidates are totally ordered by `(dist, lib_idx)`; both
   * insert and merge respect that order and `finish` folds the kept

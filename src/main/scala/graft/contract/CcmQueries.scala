@@ -1,6 +1,6 @@
 package graft.contract
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ccm.{Ccm, CcmPipeline, CcmSpec, DetHash, FftLadder, FftSurrogate, Generators, LagCcm, Simplex, Smap}
@@ -237,11 +237,41 @@ object CcmQueries {
        |FROM preds GROUP BY user_id, sample_id ORDER BY user_id, sample_id""".stripMargin
 
   // -------------------------------------------------------------------
+  // The published skill-row contract (`lib/ccm.ex:79-84,215-244`): one
+  // row per (series, direction, lib_size) carrying the 6-dp rho, the 6-dp
+  // OLS slope and the convergence flag, the series key published as `key`
+  // (user_id or series_id), ordered by (key, direction, lib_size).
+  // skillRows is the Spark side over a Ccm API result; skillRowsSql the
+  // oracle side over curveSqlCommon's sk/cv CTEs.
+  // -------------------------------------------------------------------
+  private def rho6: Column = Norm.rnd(col("rho"), 6).as("rho")
+
+  private def skillRows(rows: DataFrame, key: String): DataFrame =
+    rows
+      .select(
+        col("skey").as(key),
+        col("direction"),
+        col("lib_size"),
+        rho6,
+        Norm.rnd(col("slope"), 6).as("slope"),
+        col("convergent")
+      )
+      .transform(Norm.ordered(_, col(key), col("direction"), col("lib_size")))
+
+  private def skillRowsSql(ctes: String, key: String): String =
+    s"""$ctes
+       |SELECT sk.skey AS $key, sk.direction, sk.lib_size,
+       |       round(sk.rho, 6) + 0.0 AS rho, round(cv.slope, 6) + 0.0 AS slope, cv.convergent
+       |FROM sk JOIN cv ON sk.direction = cv.direction AND sk.skey = cv.skey
+       |ORDER BY 1, 2, 3""".stripMargin
+
+  // -------------------------------------------------------------------
   // ccm_curve — the flagship end-to-end bidirectional CCM skill curve
   // (C2+C3+C10) over per-user event series: x = value, y = lag(value).
   // -------------------------------------------------------------------
   private val CurveLibs = Seq(20, 40, 60)
   private val CurveSamples = 2
+  private val curveSpec = CcmSpec(numSamples = CurveSamples, seed = Seed)
 
   private def curveInput(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts")
@@ -250,28 +280,17 @@ object CcmQueries {
       .filter(col("y").isNotNull)
   }
 
-  private def curveWith(s: SparkSession, dir: String, knnBuckets: Int): DataFrame =
-    Ccm
-      .bidirectional(
-        curveInput(s, dir),
-        skey = col("user_id"),
-        order = Seq("ts"),
-        x = col("x"),
-        y = col("y"),
-        spec = CcmSpec(numSamples = CurveSamples, seed = Seed, knnBuckets = knnBuckets),
-        libSizes = CurveLibs
-      )
-      .select(
-        col("skey").as("user_id"),
-        col("direction"),
-        col("lib_size"),
-        Norm.rnd(col("rho"), 6).as("rho"),
-        Norm.rnd(col("slope"), 6).as("slope"),
-        col("convergent")
-      )
-      .transform(Norm.ordered(_, col("user_id"), col("direction"), col("lib_size")))
+  /** The API call of the per-user family: Ccm.bidirectional over a
+    * (user_id, ts, x, y) series ([[curveInput]] or [[bootInput]]).
+    */
+  private def userCcm(in: DataFrame, spec: CcmSpec, libs: Seq[Int]): DataFrame =
+    Ccm.bidirectional(in, skey = col("user_id"), order = Seq("ts"), x = col("x"), y = col("y"), spec = spec,
+      libSizes = libs)
 
-  private def curve(s: SparkSession, dir: String): DataFrame = curveWith(s, dir, 0)
+  private def curveWith(in: DataFrame, spec: CcmSpec, libs: Seq[Int] = CurveLibs): DataFrame =
+    skillRows(userCcm(in, spec, libs), "user_id")
+
+  private def curve(s: SparkSession, dir: String): DataFrame = curveWith(curveInput(s, dir), curveSpec)
 
   // ccm_curve_slices — the README-parity library mode (VERDICT r12 missing
   // item 1+2; /root/reference/README.md:89,103): libraries are CONSECUTIVE
@@ -283,32 +302,10 @@ object CcmQueries {
   // Ranking is sample-independent here, so ONE sample replaces the
   // bootstrap; same ladder, same weights, same skill/convergence tail.
   private def curveSlices(s: SparkSession, dir: String): DataFrame =
-    Ccm
-      .bidirectional(
-        curveInput(s, dir),
-        skey = col("user_id"),
-        order = Seq("ts"),
-        x = col("x"),
-        y = col("y"),
-        spec = CcmSpec(numSamples = 1, seed = Seed, consecutive = true),
-        libSizes = CurveLibs
-      )
-      .select(
-        col("skey").as("user_id"),
-        col("direction"),
-        col("lib_size"),
-        Norm.rnd(col("rho"), 6).as("rho"),
-        Norm.rnd(col("slope"), 6).as("slope"),
-        col("convergent")
-      )
-      .transform(Norm.ordered(_, col("user_id"), col("direction"), col("lib_size")))
+    curveWith(curveInput(s, dir), CcmSpec(numSamples = 1, seed = Seed, consecutive = true))
 
   private val curveSlicesSql: String =
-    s"""${curveSqlCommon(samples = 1, consecutive = true)}
-       |SELECT sk.skey AS user_id, sk.direction, sk.lib_size,
-       |       round(sk.rho, 6) + 0.0 AS rho, round(cv.slope, 6) + 0.0 AS slope, cv.convergent
-       |FROM sk JOIN cv ON sk.direction = cv.direction AND sk.skey = cv.skey
-       |ORDER BY 1, 2, 3""".stripMargin
+    skillRowsSql(curveSqlCommon(samples = 1, consecutive = true), "user_id")
 
   // ccm_curve_approx — the SAME workload as ccm_curve with the approximate
   // kNN flag ON (CcmSpec.knnBuckets, SURVEY §4.3) at the DEFAULT
@@ -323,7 +320,7 @@ object CcmQueries {
   private val ApproxBuckets = 8
 
   private def curveApprox(s: SparkSession, dir: String): DataFrame =
-    curveWith(s, dir, ApproxBuckets)
+    curveWith(curveInput(s, dir), curveSpec.copy(knnBuckets = ApproxBuckets))
 
   // ccm_curve_perseries — the SAME workload as ccm_curve through the
   // Ccm.perSeries entry point (fixed (skey, ord, x, y) columns, ord cast
@@ -334,18 +331,7 @@ object CcmQueries {
   private def curvePerSeries(s: SparkSession, dir: String): DataFrame = {
     val in = curveInput(s, dir)
       .select(col("user_id").as("skey"), col("ts").as("ord"), col("x"), col("y"))
-    Ccm
-      .perSeries(in, CcmSpec(numSamples = CurveSamples, seed = Seed), Some(CurveLibs))
-      .toDF()
-      .select(
-        col("skey").as("user_id"),
-        col("direction"),
-        col("lib_size"),
-        Norm.rnd(col("rho"), 6).as("rho"),
-        Norm.rnd(col("slope"), 6).as("slope"),
-        col("convergent")
-      )
-      .transform(Norm.ordered(_, col("user_id"), col("direction"), col("lib_size")))
+    skillRows(Ccm.perSeries(in, curveSpec, Some(CurveLibs)).toDF(), "user_id")
   }
 
   /** Full declarative chain mirrored as one DuckDB query.
@@ -498,11 +484,7 @@ object CcmQueries {
   }
 
   private def curveSqlWith(knnBuckets: Option[Int]): String =
-    s"""${curveSqlCommon(knnBuckets)}
-       |SELECT sk.skey AS user_id, sk.direction, sk.lib_size,
-       |       round(sk.rho, 6) + 0.0 AS rho, round(cv.slope, 6) + 0.0 AS slope, cv.convergent
-       |FROM sk JOIN cv ON sk.direction = cv.direction AND sk.skey = cv.skey
-       |ORDER BY 1, 2, 3""".stripMargin
+    skillRowsSql(curveSqlCommon(knnBuckets), "user_id")
 
   private val curveSql: String = curveSqlWith(None)
   private val curveApproxSql: String = curveSqlWith(Some(ApproxBuckets))
@@ -549,14 +531,15 @@ object CcmQueries {
   private val WideSamples = 1
   private val WideBuckets = 16
 
-  private def wideInput(s: SparkSession, dir: String): DataFrame = {
+  /** The folded wide series, keeping every `seriesMod`-th one. */
+  private def wideInput(s: SparkSession, dir: String, seriesMod: Int = 1): DataFrame = {
     val skey = col("user_id") % WideMod
     // (ts, user_id) is a total order (verified: (user_id, ts) unique), so
     // the folded series is deterministic despite cross-user interleaving;
     // the even-user filter halves series length to keep the bench entry's
     // absolute cost moderate while staying ~10x ccm_curve's series width
     val w = Window.partitionBy(skey).orderBy(col("ts"), col("user_id"))
-    ev(s, dir)
+    val all = ev(s, dir)
       .filter(col("user_id") % 2 === 0)
       .select(
         skey.as("skey"),
@@ -566,32 +549,31 @@ object CcmQueries {
         lag(col("value"), 1).over(w).as("y")
       )
       .filter(col("y").isNotNull)
+    // filtering whole series (skey is the window partition key) after the
+    // lag window is equivalent to filtering before it
+    if (seriesMod == 1) all else all.filter(col("skey") % seriesMod === 0)
   }
 
-  private def wideWith(s: SparkSession, dir: String, knnBuckets: Int): DataFrame =
-    Ccm
-      .bidirectional(
-        wideInput(s, dir),
+  // knnAutoFactor = 0: the wide pair IS the bucket-path demonstration and
+  // must exercise it at every gate SF (the sf0.01 correctness run has
+  // ~124-pt folded series, below the default auto-gate threshold)
+  private def wideSpec(knnBuckets: Int, e: Int = 3): CcmSpec =
+    CcmSpec(embeddingDim = e, numSamples = WideSamples, seed = Seed, knnBuckets = knnBuckets, knnAutoFactor = 0)
+
+  /** The API call of the wide family, the Spark twin of [[wideSqlWith]]. */
+  private def wideWith(s: SparkSession, dir: String, knnBuckets: Int, e: Int = 3, seriesMod: Int = 1): DataFrame =
+    skillRows(
+      Ccm.bidirectional(
+        wideInput(s, dir, seriesMod),
         skey = col("skey"),
         order = Seq("ts", "user_id"),
         x = col("x"),
         y = col("y"),
-        // knnAutoFactor = 0: the wide pair IS the bucket-path demonstration
-        // and must exercise it at every gate SF (the sf0.01 correctness run
-        // has ~124-pt folded series, below the default auto-gate threshold)
-        spec = CcmSpec(numSamples = WideSamples, seed = Seed, knnBuckets = knnBuckets,
-          knnAutoFactor = 0),
+        spec = wideSpec(knnBuckets, e),
         libSizes = WideLibs
-      )
-      .select(
-        col("skey").as("series_id"),
-        col("direction"),
-        col("lib_size"),
-        Norm.rnd(col("rho"), 6).as("rho"),
-        Norm.rnd(col("slope"), 6).as("slope"),
-        col("convergent")
-      )
-      .transform(Norm.ordered(_, col("series_id"), col("direction"), col("lib_size")))
+      ),
+      "series_id"
+    )
 
   private def wide(s: SparkSession, dir: String): DataFrame = wideWith(s, dir, 0)
   private def wideApprox(s: SparkSession, dir: String): DataFrame =
@@ -612,42 +594,25 @@ object CcmQueries {
         col("x"),
         col("y")
       )
-    Ccm
-      .perSeries(
-        in,
-        CcmSpec(numSamples = WideSamples, seed = Seed, knnBuckets = WideBuckets,
-          knnAutoFactor = 0),
-        Some(WideLibs)
-      )
-      .toDF()
-      .select(
-        col("skey").as("series_id"),
-        col("direction"),
-        col("lib_size"),
-        Norm.rnd(col("rho"), 6).as("rho"),
-        Norm.rnd(col("slope"), 6).as("slope"),
-        col("convergent")
-      )
-      .transform(Norm.ordered(_, col("series_id"), col("direction"), col("lib_size")))
+    skillRows(Ccm.perSeries(in, wideSpec(WideBuckets), Some(WideLibs)).toDF(), "series_id")
   }
 
   private def wideSqlWith(knnBuckets: Option[Int], e: Int = 3, seriesMod: Int = 1): String = {
     val seriesFilter = if (seriesMod == 1) "" else s" AND (user_id % $WideMod) % $seriesMod = 0"
-    s"""${curveSqlCommon(
-          knnBuckets,
-          WideSamples,
-          WideLibs,
-          s"user_id % $WideMod",
-          Seq("ts", "user_id"),
-          s"(SELECT * FROM events WHERE user_id % 2 = 0$seriesFilter)",
-          None,
-          e,
-          knnAutoFactor = 0
-        )}
-       |SELECT sk.skey AS series_id, sk.direction, sk.lib_size,
-       |       round(sk.rho, 6) + 0.0 AS rho, round(cv.slope, 6) + 0.0 AS slope, cv.convergent
-       |FROM sk JOIN cv ON sk.direction = cv.direction AND sk.skey = cv.skey
-       |ORDER BY 1, 2, 3""".stripMargin
+    skillRowsSql(
+      curveSqlCommon(
+        knnBuckets,
+        WideSamples,
+        WideLibs,
+        s"user_id % $WideMod",
+        Seq("ts", "user_id"),
+        s"(SELECT * FROM events WHERE user_id % 2 = 0$seriesFilter)",
+        None,
+        e,
+        knnAutoFactor = 0
+      ),
+      "series_id"
+    )
   }
 
   private val wideSql: String = wideSqlWith(None)
@@ -665,62 +630,32 @@ object CcmQueries {
   private val Wide4SeriesMod = 4
   private val Wide4E = 4
 
-  private def wide4Input(s: SparkSession, dir: String): DataFrame =
-    // filtering whole series (skey is the window partition key) after the
-    // lag window is equivalent to filtering before it
-    wideInput(s, dir).filter(col("skey") % Wide4SeriesMod === 0)
-
-  private def wide4With(s: SparkSession, dir: String, knnBuckets: Int): DataFrame =
-    Ccm
-      .bidirectional(
-        wide4Input(s, dir),
-        skey = col("skey"),
-        order = Seq("ts", "user_id"),
-        x = col("x"),
-        y = col("y"),
-        spec = CcmSpec(embeddingDim = Wide4E, numSamples = WideSamples, seed = Seed,
-          knnBuckets = knnBuckets, knnAutoFactor = 0),
-        libSizes = WideLibs
-      )
-      .select(
-        col("skey").as("series_id"),
-        col("direction"),
-        col("lib_size"),
-        Norm.rnd(col("rho"), 6).as("rho"),
-        Norm.rnd(col("slope"), 6).as("slope"),
-        col("convergent")
-      )
-      .transform(Norm.ordered(_, col("series_id"), col("direction"), col("lib_size")))
-
-  private def wide4(s: SparkSession, dir: String): DataFrame = wide4With(s, dir, 0)
+  private def wide4(s: SparkSession, dir: String): DataFrame = wideWith(s, dir, 0, Wide4E, Wide4SeriesMod)
   private def wide4Approx(s: SparkSession, dir: String): DataFrame =
-    wide4With(s, dir, WideBuckets)
+    wideWith(s, dir, WideBuckets, Wide4E, Wide4SeriesMod)
 
   private val wide4Sql: String = wideSqlWith(None, Wide4E, Wide4SeriesMod)
   private val wide4ApproxSql: String = wideSqlWith(Some(WideBuckets), Wide4E, Wide4SeriesMod)
 
   // -------------------------------------------------------------------
-  // ccm_boot / ccm_boot_reuse — the bootstrap-heavy regime (the
-  // reference's own default shape, `lib/ccm.ex:7`: num_samples 100 with
-  // the auto-ladder reaching the full series length) that motivated
-  // distance-reuse across samples (SURVEY §4 item 2,
-  // CcmSpec.reuseDistances). Series are capped at BootCap points so the
+  // ccm_boot — the bootstrap-heavy regime (the reference's own default
+  // shape, `lib/ccm.ex:7`: num_samples 100 with the auto-ladder reaching
+  // the full series length). Series are capped at BootCap points so the
   // workload sits in the heavy-library-overlap regime at every SF. The
-  // two entries share one oracle. Ccm.bidirectional runs the CcmLocal
-  // kernel, which ignores reuseDistances, so ccm_boot_reuse now runs
-  // ccm_boot's path; the reuse relation itself is checked by
-  // ReuseDistancesSpec (CcmSpec.reuseDistances scaladoc: it measured
-  // SLOWER in the declarative plan). Retiring the twin is ROADMAP H.
+  // same capped series (bootInput, bootCapSql on the oracle side) feeds
+  // ccm_boot_ci, ccm_multiview, the surrogate nulls, the S-map family and
+  // ccm_lag_sweep.
   // -------------------------------------------------------------------
   private val BootSamples = 8
   private val BootLibs = Seq(16, 32, 48)
   private val BootCap = 66
   private val BootUserMod = 10
+  private val bootSpec = CcmSpec(numSamples = BootSamples, seed = Seed)
 
   private def bootInput(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts")
-    // cap FIRST, then lag within the capped rows (the oracle's baseFrom
-    // subquery applies the same order of operations)
+    // cap FIRST, then lag within the capped rows (bootCapSql applies the
+    // same order of operations)
     val capped = ev(s, dir)
       .filter(col("user_id") % BootUserMod === 0)
       .withColumn("rn", row_number().over(w))
@@ -736,52 +671,34 @@ object CcmQueries {
       .filter(col("y").isNotNull)
   }
 
-  private def bootWith(s: SparkSession, dir: String, spec: CcmSpec): DataFrame =
-    Ccm
-      .bidirectional(
-        bootInput(s, dir),
-        skey = col("user_id"),
-        order = Seq("ts"),
-        x = col("x"),
-        y = col("y"),
-        spec = spec,
-        libSizes = BootLibs
-      )
-      .select(
-        col("skey").as("user_id"),
-        col("direction"),
-        col("lib_size"),
-        Norm.rnd(col("rho"), 6).as("rho"),
-        Norm.rnd(col("slope"), 6).as("slope"),
-        col("convergent")
-      )
-      .transform(Norm.ordered(_, col("user_id"), col("direction"), col("lib_size")))
+  /** The capped series of [[bootInput]] on the oracle side, before the lag:
+    * the first BootCap rows of every BootUserMod-th user.
+    */
+  private val bootCapSql: String =
+    s"""SELECT user_id, ts, value FROM (
+       |    SELECT user_id, ts, value,
+       |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
+       |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap""".stripMargin
 
-  private val bootSpec = CcmSpec(numSamples = BootSamples, seed = Seed)
-  private def boot(s: SparkSession, dir: String): DataFrame = bootWith(s, dir, bootSpec)
-  private def bootReuse(s: SparkSession, dir: String): DataFrame =
-    bootWith(s, dir, bootSpec.copy(reuseDistances = true))
+  /** Oracle CTEs over the capped series: cap, then b0 (skey, ts, x, y =
+    * lag(value, 1)); b0 still holds the first row, whose y is null.
+    */
+  private val bootB0Ctes: String =
+    s"""WITH cap AS (
+       |  $bootCapSql
+       |), b0 AS (
+       |  SELECT user_id AS skey, ts, value AS x,
+       |         lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts) AS y
+       |  FROM cap
+       |)""".stripMargin
 
-  // ccm_boot_fused — same workload with CcmSpec.fusedTopK (the FusedKnn
-  // aggregate tail, SURVEY §4 item 1): third member of the shared-oracle
-  // family. Like ccm_boot_reuse it now runs ccm_boot's kernel path, as
-  // the flag shapes only the declarative pair join (FusedKnnSpec checks
-  // that tail); retiring it is ROADMAP H.
-  private def bootFused(s: SparkSession, dir: String): DataFrame =
-    bootWith(s, dir, bootSpec.copy(fusedTopK = true))
+  private def boot(s: SparkSession, dir: String): DataFrame = curveWith(bootInput(s, dir), bootSpec, BootLibs)
 
-  private val bootSql: String = {
-    val capFrom =
-      s"""(SELECT user_id, ts, value FROM (
-         |    SELECT user_id, ts, value,
-         |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-         |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap)""".stripMargin
-    s"""${curveSqlCommon(None, BootSamples, BootLibs, "user_id", Seq("ts"), capFrom)}
-       |SELECT sk.skey AS user_id, sk.direction, sk.lib_size,
-       |       round(sk.rho, 6) + 0.0 AS rho, round(cv.slope, 6) + 0.0 AS slope, cv.convergent
-       |FROM sk JOIN cv ON sk.direction = cv.direction AND sk.skey = cv.skey
-       |ORDER BY 1, 2, 3""".stripMargin
-  }
+  /** The declarative chain over the capped series (ccm_boot, ccm_boot_ci). */
+  private val bootCurveCtes: String =
+    curveSqlCommon(None, BootSamples, BootLibs, "user_id", Seq("ts"), s"($bootCapSql)")
+
+  private val bootSql: String = skillRowsSql(bootCurveCtes, "user_id")
 
   // -------------------------------------------------------------------
   // ccm_multiview — multiview embedding cross-mapping (Ye & Sugihara
@@ -814,16 +731,11 @@ object CcmQueries {
       .transform(Norm.ordered(_, col("user_id")))
 
   private val multiviewSql: String = {
-    val capFrom =
-      s"""(SELECT user_id, ts, value FROM (
-         |    SELECT user_id, ts, value,
-         |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-         |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap)""".stripMargin
     val views = graft.ccm.Multiview
       .viewPairs(Seq(0, 1, 2, 3))
       .map { case (vid, l1, l2) => s"($vid, $l1, $l2)" }
       .mkString(", ")
-    s"""WITH cap AS (SELECT * FROM $capFrom),
+    s"""WITH cap AS (SELECT * FROM ($bootCapSql)),
        |mb0 AS (
        |  SELECT user_id AS skey, ts, value AS x,
        |         lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS y
@@ -926,7 +838,7 @@ object CcmQueries {
   private def surrogateWith(
       s: SparkSession,
       dir: String,
-      posOf: DataFrame => org.apache.spark.sql.Column
+      posOf: DataFrame => Column
   ): DataFrame = {
     import s.implicits._
     val w = Window.partitionBy("user_id").orderBy("ts")
@@ -1015,28 +927,30 @@ object CcmQueries {
       }
     )
 
+  /** The opening of a surrogate bundle's oracle subquery: `cap` as
+    * given (a form of [[bootCapSql]]), sb = its rows with a y =
+    * lag(value), and sbi = sb numbered i = 1..n per user.
+    */
+  private def surrSeriesSql(cap: String): String =
+    s"""(WITH cap AS ($cap),
+       |  sb0 AS (
+       |    SELECT user_id, ts, value AS x,
+       |           lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS y
+       |    FROM cap
+       |  ), sb AS (SELECT * FROM sb0 WHERE y IS NOT NULL),
+       |  sbi AS (
+       |    SELECT user_id, x, y,
+       |           CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS i,
+       |           CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n
+       |    FROM sb
+       |  ),""".stripMargin
+
   /** SQL twin of [[surrogateWith]] — `posCase` is the spr CTE's position
     * rule over b (user_id, i, n, x) × kk (k).
     */
   private def surrogateSqlWith(posCase: String): String = {
-    val capFrom =
-      s"""(SELECT user_id, ts, value FROM (
-         |    SELECT user_id, ts, value,
-         |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-         |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap)""".stripMargin
     val surrFrom =
-      s"""(WITH cap AS (SELECT * FROM $capFrom),
-         |  sb0 AS (
-         |    SELECT user_id, ts, value AS x,
-         |           lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS y
-         |    FROM cap
-         |  ), sb AS (SELECT * FROM sb0 WHERE y IS NOT NULL),
-         |  sbi AS (
-         |    SELECT user_id, x, y,
-         |           CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS i,
-         |           CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n
-         |    FROM sb
-         |  ),
+      s"""${surrSeriesSql(s"SELECT * FROM ($bootCapSql)")}
          |  ks(k) AS (SELECT CAST(unnest(generate_series(0, $SurrK)) AS BIGINT)),
          |  spr AS (
          |    SELECT b.user_id, kk.k, b.i, b.x,
@@ -1125,21 +1039,7 @@ object CcmQueries {
   private val surrogateFftSql: String = {
     val h = DetHash.rankHashSql("c.f", "kk.k", "c.user_id", FftSeed)
     val surrFrom =
-      s"""(WITH cap AS (SELECT user_id, ts, value FROM (
-         |    SELECT user_id, ts, value,
-         |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-         |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap),
-         |  sb0 AS (
-         |    SELECT user_id, ts, value AS x,
-         |           lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS y
-         |    FROM cap
-         |  ), sb AS (SELECT * FROM sb0 WHERE y IS NOT NULL),
-         |  sbi AS (
-         |    SELECT user_id, x, y,
-         |           CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts) AS BIGINT) AS i,
-         |           CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n
-         |    FROM sb
-         |  ),
+      s"""${surrSeriesSql(bootCapSql)}
          |  pts AS (SELECT user_id, i, i - 1 AS t, n, x, y FROM sbi),
          |  fq AS (SELECT user_id, t AS f, n FROM pts WHERE t * 2 <= n),
          |  cf0 AS (
@@ -1228,6 +1128,41 @@ object CcmQueries {
   private val SmapThetas = Smap.DefaultThetas
   private val SmapEps = Smap.DefaultNonlinearEps
 
+  /** The S-map family's oracle series: [[bootB0Ctes]], then sb = b0's
+    * rows with a y, numbered by a 1-based idx.
+    */
+  private val smapSeriesCtes: String =
+    s"""$bootB0Ctes, sb AS (
+       |  SELECT skey, row_number() OVER (PARTITION BY skey ORDER BY ts) AS idx, x, y
+       |  FROM b0 WHERE y IS NOT NULL
+       |)""".stripMargin
+
+  /** A θ-sweep result (ccm_smap, ccm_smap_e3) as published. */
+  private def smapRows(sweep: DataFrame): DataFrame =
+    sweep
+      .select(col("skey").as("user_id"), col("direction"), col("theta"), col("rho"), col("nonlinear"))
+      .transform(Norm.ordered(_, col("user_id"), col("direction"), col("theta")))
+
+  /** The oracle of a θ-sweep around one chain per direction, ending in
+    * rh{n} (skey, direction, theta, rho): the capped series, the θ
+    * ladder, and `nonlinear` from the same 6-dp rhos both engines output.
+    */
+  private def smapSweepSql(dirSql: (String, String, String, Int) => String): String =
+    s"""$smapSeriesCtes, thetas AS (SELECT CAST(unnest([${SmapThetas.mkString(", ")}]) AS DOUBLE) AS theta),
+       |${dirSql("y", "x", "x_causes_y", 1)},
+       |${dirSql("x", "y", "y_causes_x", 2)},
+       |u AS (SELECT * FROM rh1 UNION ALL SELECT * FROM rh2),
+       |fl AS (
+       |  SELECT *,
+       |         max(CASE WHEN theta = ${SmapThetas.min} THEN rho END)
+       |           OVER (PARTITION BY skey, direction) AS rho0,
+       |         max(rho) OVER (PARTITION BY skey, direction) AS rho_max
+       |  FROM u
+       |)
+       |SELECT skey AS user_id, direction, theta, rho,
+       |       (rho_max - rho0 > CAST($SmapEps AS DOUBLE)) AS nonlinear
+       |FROM fl ORDER BY 1, 2, 3""".stripMargin
+
   private def smap(s: SparkSession, dir: String): DataFrame =
     Smap
       .bidirectional(
@@ -1239,14 +1174,7 @@ object CcmQueries {
         thetas = SmapThetas,
         nonlinearEps = SmapEps
       )
-      .select(
-        col("skey").as("user_id"),
-        col("direction"),
-        col("theta"),
-        col("rho"),
-        col("nonlinear")
-      )
-      .transform(Norm.ordered(_, col("user_id"), col("direction"), col("theta")))
+      .transform(smapRows)
 
   private val smapSql: String = {
     def dirSql(srcCol: String, tgtCol: String, dirName: String, n: Int): String =
@@ -1278,32 +1206,7 @@ object CcmQueries {
          |         round(coalesce(corr(tg, pred), 0.0), 6) + 0.0 AS rho
          |  FROM pr$n GROUP BY 1, 2, 3
          |)""".stripMargin
-    s"""WITH cap AS (
-       |  SELECT user_id, ts, value FROM (
-       |    SELECT user_id, ts, value,
-       |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-       |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap
-       |), b0 AS (
-       |  SELECT user_id AS skey, ts, value AS x,
-       |         lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts) AS y
-       |  FROM cap
-       |), sb AS (
-       |  SELECT skey, row_number() OVER (PARTITION BY skey ORDER BY ts) AS idx, x, y
-       |  FROM b0 WHERE y IS NOT NULL
-       |), thetas AS (SELECT CAST(unnest([${SmapThetas.mkString(", ")}]) AS DOUBLE) AS theta),
-       |${dirSql("y", "x", "x_causes_y", 1)},
-       |${dirSql("x", "y", "y_causes_x", 2)},
-       |u AS (SELECT * FROM rh1 UNION ALL SELECT * FROM rh2),
-       |fl AS (
-       |  SELECT *,
-       |         max(CASE WHEN theta = ${SmapThetas.min} THEN rho END)
-       |           OVER (PARTITION BY skey, direction) AS rho0,
-       |         max(rho) OVER (PARTITION BY skey, direction) AS rho_max
-       |  FROM u
-       |)
-       |SELECT skey AS user_id, direction, theta, rho,
-       |       (rho_max - rho0 > CAST($SmapEps AS DOUBLE)) AS nonlinear
-       |FROM fl ORDER BY 1, 2, 3""".stripMargin
+    smapSweepSql(dirSql)
   }
 
   // -------------------------------------------------------------------
@@ -1379,13 +1282,8 @@ object CcmQueries {
       .transform(Norm.ordered(_, col("user_id"), col("direction"), col("lib_size")))
   }
 
-  private val bootCiSql: String = {
-    val capFrom =
-      s"""(SELECT user_id, ts, value FROM (
-         |    SELECT user_id, ts, value,
-         |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-         |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap)""".stripMargin
-    s"""${curveSqlCommon(None, BootSamples, BootLibs, "user_id", Seq("ts"), capFrom)},
+  private val bootCiSql: String =
+    s"""$bootCurveCtes,
        |r6 AS (
        |  SELECT skey, direction, lib_size, sample_id, round(rho_cell, 6) + 0.0 AS rho6
        |  FROM cells
@@ -1410,7 +1308,6 @@ object CcmQueries {
        |FROM agg6 a JOIN med6 m
        |  ON a.skey = m.skey AND a.direction = m.direction AND a.lib_size = m.lib_size
        |ORDER BY 1, 2, 3""".stripMargin
-  }
 
   // -------------------------------------------------------------------
   // ccm_smap_coeffs — the S-map's TIME-VARYING interaction strength
@@ -1469,19 +1366,7 @@ object CcmQueries {
          |              ELSE 0.0 END AS bc
          |  FROM cag$n
          |)""".stripMargin
-    s"""WITH cap AS (
-       |  SELECT user_id, ts, value FROM (
-       |    SELECT user_id, ts, value,
-       |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-       |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap
-       |), b0 AS (
-       |  SELECT user_id AS skey, ts, value AS x,
-       |         lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts) AS y
-       |  FROM cap
-       |), sb AS (
-       |  SELECT skey, row_number() OVER (PARTITION BY skey ORDER BY ts) AS idx, x, y
-       |  FROM b0 WHERE y IS NOT NULL
-       |),
+    s"""$smapSeriesCtes,
        |${dirSql("y", "x", "x_causes_y", 1)},
        |${dirSql("x", "y", "y_causes_x", 2)},
        |cu AS (SELECT * FROM cco1 UNION ALL SELECT * FROM cco2)
@@ -1516,14 +1401,7 @@ object CcmQueries {
         thetas = SmapThetas,
         nonlinearEps = SmapEps
       )
-      .select(
-        col("skey").as("user_id"),
-        col("direction"),
-        col("theta"),
-        col("rho"),
-        col("nonlinear")
-      )
-      .transform(Norm.ordered(_, col("user_id"), col("direction"), col("theta")))
+      .transform(smapRows)
 
   private val smapE3Sql: String = {
     val e = SmapE
@@ -1560,32 +1438,7 @@ object CcmQueries {
          |  FROM pr$n GROUP BY 1, 2, 3
          |)""".stripMargin
     }
-    s"""WITH cap AS (
-       |  SELECT user_id, ts, value FROM (
-       |    SELECT user_id, ts, value,
-       |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-       |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap
-       |), b0 AS (
-       |  SELECT user_id AS skey, ts, value AS x,
-       |         lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts) AS y
-       |  FROM cap
-       |), sb AS (
-       |  SELECT skey, row_number() OVER (PARTITION BY skey ORDER BY ts) AS idx, x, y
-       |  FROM b0 WHERE y IS NOT NULL
-       |), thetas AS (SELECT CAST(unnest([${SmapThetas.mkString(", ")}]) AS DOUBLE) AS theta),
-       |${dirSql("y", "x", "x_causes_y", 1)},
-       |${dirSql("x", "y", "y_causes_x", 2)},
-       |u AS (SELECT * FROM rh1 UNION ALL SELECT * FROM rh2),
-       |fl AS (
-       |  SELECT *,
-       |         max(CASE WHEN theta = ${SmapThetas.min} THEN rho END)
-       |           OVER (PARTITION BY skey, direction) AS rho0,
-       |         max(rho) OVER (PARTITION BY skey, direction) AS rho_max
-       |  FROM u
-       |)
-       |SELECT skey AS user_id, direction, theta, rho,
-       |       (rho_max - rho0 > CAST($SmapEps AS DOUBLE)) AS nonlinear
-       |FROM fl ORDER BY 1, 2, 3""".stripMargin
+    smapSweepSql(dirSql)
   }
 
   // -------------------------------------------------------------------
@@ -1650,16 +1503,7 @@ object CcmQueries {
          |         round(coalesce(corr(act, pred), 0.0), 6) + 0.0 AS rho
          |  FROM pd$n GROUP BY 1, 2, 3
          |)""".stripMargin
-    s"""WITH cap AS (
-       |  SELECT user_id, ts, value FROM (
-       |    SELECT user_id, ts, value,
-       |           row_number() OVER (PARTITION BY user_id ORDER BY ts) AS rn
-       |    FROM events WHERE user_id % $BootUserMod = 0) WHERE rn <= $BootCap
-       |), b0 AS (
-       |  SELECT user_id AS skey, ts, value AS x,
-       |         lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts) AS y
-       |  FROM cap
-       |), sb AS (SELECT skey, ts, x, y FROM b0 WHERE y IS NOT NULL),
+    s"""$bootB0Ctes, sb AS (SELECT skey, ts, x, y FROM b0 WHERE y IS NOT NULL),
        |lags AS (SELECT CAST(unnest(generate_series(-3, 3)) AS BIGINT) AS lag),
        |${dirSql("y", "x", "x_causes_y", 1)},
        |${dirSql("x", "y", "y_causes_x", 2)},
@@ -1686,7 +1530,7 @@ object CcmQueries {
     val in = curveInput(s, dir)
       .select(col("user_id").as("skey"), col("ts").as("ord"), col("x"), col("y"))
     Ccm
-      .perSeries(in, CcmSpec(numSamples = CurveSamples, seed = Seed), Some(CurveLibs))
+      .perSeries(in, curveSpec, Some(CurveLibs))
       .toDF()
       .select(col("skey").as("user_id"), col("direction"), Norm.rnd(col("slope"), 6).as("slope"), col("convergent"))
       .distinct()
@@ -2283,6 +2127,11 @@ object CcmQueries {
     (ps, pwin)
   }
 
+  /** The API call of the screen family: Ccm.bidirectional over (pkey, idx, x, y) pair series. */
+  private def screenCcm(pairInput: DataFrame): DataFrame =
+    Ccm.bidirectional(pairInput, skey = col("pkey"), order = Seq("idx"), x = col("x"), y = col("y"),
+      spec = CcmSpec(numSamples = ScreenSamples, seed = Seed), libSizes = Seq(ScreenLib))
+
   private def pairwiseScreenWith(s: SparkSession, dir: String, banded: Boolean): DataFrame = {
     val (ps, pwin) = screenGate(s, dir, banded)
     val pairInput = pwin
@@ -2291,15 +2140,7 @@ object CcmQueries {
       .join(ps.select(col("user_id").as("ua"), col("idx"), col("value").as("x")), Seq("ua"))
       .join(ps.select(col("user_id").as("ub"), col("idx"), col("value").as("y")), Seq("ub", "idx"))
       .select((col("ua") * ScreenPairBase + col("ub")).as("pkey"), col("idx"), col("x"), col("y"))
-    val ccm = Ccm.bidirectional(
-      pairInput,
-      skey = col("pkey"),
-      order = Seq("idx"),
-      x = col("x"),
-      y = col("y"),
-      spec = CcmSpec(numSamples = ScreenSamples, seed = Seed),
-      libSizes = Seq(ScreenLib)
-    )
+    val ccm = screenCcm(pairInput)
     val gateRows = pwin.select(
       col("ua"),
       col("ub"),
@@ -2316,7 +2157,7 @@ object CcmQueries {
       lit(null).cast("long").as("best_lag"),
       lit(null).cast("double").as("ccf"),
       lit(1L).as("survived"),
-      Norm.rnd(col("rho"), 6).as("rho")
+      rho6
     )
     gateRows
       .unionByName(ccmRows)
@@ -2415,17 +2256,7 @@ object CcmQueries {
   // are oracle-verified here.
   // -------------------------------------------------------------------
   private def ccmConvergencePlot(s: SparkSession, dir: String): DataFrame = {
-    val in = curveInput(s, dir).filter(col("user_id") === 0L)
-    Ccm
-      .bidirectional(
-        in,
-        skey = col("user_id"),
-        order = Seq("ts"),
-        x = col("x"),
-        y = col("y"),
-        spec = CcmSpec(numSamples = CurveSamples, seed = Seed),
-        libSizes = CurveLibs
-      )
+    userCcm(curveInput(s, dir).filter(col("user_id") === 0L), curveSpec, CurveLibs)
       .select(
         col("lib_size").as("library_size"),
         Norm.rnd(col("rho"), 6).as("correlation"),
@@ -2487,15 +2318,7 @@ object CcmQueries {
         col("x"),
         col("y")
       )
-    val ccm = Ccm.bidirectional(
-      pairInput,
-      skey = col("pkey"),
-      order = Seq("idx"),
-      x = col("x"),
-      y = col("y"),
-      spec = CcmSpec(numSamples = ScreenSamples, seed = Seed),
-      libSizes = Seq(ScreenLib)
-    )
+    val ccm = screenCcm(pairInput)
     val obs = ccm
       .filter(expr("skey % 100 = 0"))
       .select(expr("skey DIV 100").as("pkey"), col("direction"), col("rho").as("rho_obs"))
@@ -2579,8 +2402,6 @@ object CcmQueries {
     "ccm_wide4_approx" -> wide4Approx,
     "ccm_boot" -> boot,
     "ccm_boot_ci" -> bootCi,
-    "ccm_boot_reuse" -> bootReuse,
-    "ccm_boot_fused" -> bootFused,
     "ccm_convergence" -> convergenceQ,
     "ccm_gen_logistic" -> genLogistic,
     "ccm_gen_coupled" -> genCoupled,
@@ -2624,8 +2445,6 @@ object CcmQueries {
     "ccm_wide4_approx" -> wide4ApproxSql,
     "ccm_boot" -> bootSql,
     "ccm_boot_ci" -> bootCiSql,
-    "ccm_boot_reuse" -> bootSql,
-    "ccm_boot_fused" -> bootSql,
     "ccm_convergence" -> convergenceSql,
     "ccm_gen_logistic" -> genLogisticSql,
     "ccm_gen_coupled" -> genCoupledSql,

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -13,13 +12,8 @@ import org.apache.spark.sql.streaming.OutputMode
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.ExtraConf.session(defaultCpus = 4)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
 
     val rate = spark.readStream.format("rate").option("rowsPerSecond", "200").load()
     val events = rate.select(

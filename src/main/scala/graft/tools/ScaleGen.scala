@@ -36,13 +36,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft_sf1")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("scale-gen")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.ExtraConf.session(defaultCpus = 32, Some("scale-gen"))
     generate(spark, src, dst, copies)
     spark.stop()
   }

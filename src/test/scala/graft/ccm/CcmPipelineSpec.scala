@@ -123,15 +123,53 @@ class CcmPipelineSpec extends SparkTestBase {
     assertRejected(pair(4L).withColumn("skey", when($"ord" === 100L, lit(null)).otherwise($"skey")), "null series key")
   }
 
-  test("a constant series yields rho within 1e-12 of 0.0 from both APIs, exactly 0.0 where it is the target") {
-    // x_causes_y predicts the constant: exactly 0.0. y_causes_x embeds it,
-    // so every query gets the same prediction and the kernel's two-pass
-    // mean leaves ulp-level variance: rho ~1e-17, 0.0 at the 6-dp contract
-    bothApis(pair(3L).withColumn("x", lit(1.5))).foreach { run =>
+  /** A 200-point coupled pair as series `skey`, ordered by (ts, user_id)
+    * as ccm_wide folds users into one series: every ts is shared by two
+    * rows, user 0 then user 1.
+    */
+  private def folded(skey: Long): DataFrame = {
+    val (xs, ys) = Generators.coupledLogisticMaps(200, 0.3)
+    xs.indices.map(i => (skey, (i / 2).toLong, (i % 2).toLong, xs(i), ys(i))).toDF("skey", "ts", "user_id", "x", "y")
+  }
+
+  private def foldedCcm(df: DataFrame): Seq[Row] =
+    Ccm.bidirectional(df, $"skey", Seq("ts", "user_id"), $"x", $"y", spec, libSizes).collect().toSeq
+
+  test("a composite order accepts rows that share ts but differ in user_id") {
+    val got = foldedCcm(folded(8L))
+      .map(r => (r.getAs[String]("direction"), r.getAs[Int]("lib_size")) -> r.getAs[Double]("rho"))
+      .toMap
+    val (xs, ys) = Generators.coupledLogisticMaps(200, 0.3)
+    val local = CcmLocal.bidirectional(xs, ys, spec.copy(libSizes = Some(libSizes)), 8L)
+    val want = Seq(Ccm.DirXCausesY -> local.xCausesY, Ccm.DirYCausesX -> local.yCausesX)
+      .flatMap { case (d, res) => res.results.map { case (l, rho) => (d, l) -> rho } }
+      .toMap
+    assert(got == want)
+  }
+
+  test("a composite order rejects a repeated (ts, user_id) tuple, naming the series") {
+    // row (ts 50, user 1) moved onto (ts 49, user 1)
+    val dup = folded(9L).withColumn("ts", when($"ts" === 50L && $"user_id" === 1L, 49L).otherwise($"ts"))
+    val err = intercept[Exception](foldedCcm(dup))
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(
+      chain.exists(t => t.isInstanceOf[IllegalArgumentException] && t.getMessage.contains("series 9 repeats")),
+      err.getMessage
+    )
+  }
+
+  test("a constant series yields rho and slope exactly 0.0 in both directions from both APIs") {
+    // x_causes_y predicts the constant; y_causes_x embeds it, so every
+    // query gets the same prediction. The mean of n equal doubles is
+    // inexact for 0.1 (and for most predictions), which leaves a tiny
+    // two-pass variance; only a test on the values themselves gives 0.0
+    for (c <- Seq(1.5, 0.1); run <- bothApis(pair(3L).withColumn("x", lit(c)))) {
       val rows = run()
       assert(rows.size == 2 * libSizes.size)
-      assert(rows.forall(r => math.abs(r.getAs[Double]("rho")) < 1e-12), rows.mkString("\n"))
-      assert(rows.filter(_.getAs[String]("direction") == Ccm.DirXCausesY).forall(_.getAs[Double]("rho") == 0.0))
+      assert(
+        rows.forall(r => r.getAs[Double]("rho") == 0.0 && r.getAs[Double]("slope") == 0.0),
+        s"x = $c:\n" + rows.mkString("\n")
+      )
     }
   }
 
