@@ -41,6 +41,11 @@ import java.nio.file.{Files, Paths}
   *     all tries join the query's verdict and the quietest ships verbatim
   *     under "requeue" with its try count and a settled flag, so a
   *     still-noisy requeue can never masquerade as a quiet defense.
+  *   - a partial run (SPARK_GRAFT_ONLY) takes each query's min-of-3
+  *     window only: no above-bar retries and no end-of-run requeue, as it
+  *     skips the sf1 panel. Its bars come from the full-suite baselines,
+  *     which a local A/B host reads above; its JSON records
+  *     "retries":"skipped".
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -200,7 +205,7 @@ object Bench {
       def sawQuietAboveBar =
         bar.exists(b => windows.exists(w => quietWin(name, w, canaryBase) && w.t.exists(_ > b)))
       var retries = 0
-      while (bar.isDefined && rawMin.exists(m => m > bar.get) &&
+      while (only.isEmpty && bar.isDefined && rawMin.exists(m => m > bar.get) &&
              !sawQuietAboveBar && retries < MaxRetryWindows) {
         // above the 2x bar with only noisy windows so far: re-measure
         // (pair-family retries carry pair-canary brackets so their quiet
@@ -238,7 +243,7 @@ object Bench {
     val requeued =
       collection.mutable.LinkedHashMap.empty[String, (Win, Int, Boolean)]
     val resultsFinal =
-      if (preRequeueDrift <= RequeueDriftFactor) results
+      if (only.isDefined || preRequeueDrift <= RequeueDriftFactor) results
       else results.map { case (name, windows) =>
         val rawMin = windows.flatMap(_.t).minOption
         val bar = BenchBaseline.mergedMinSec.get(name).map(barOf)
@@ -304,9 +309,10 @@ object Bench {
       f"""{"min":${canaryPairSamples.min}%.3f,"max":${canaryPairSamples.max}%.3f,"samples":${canaryPairSamples.size}}"""
     // a filtered run must be distinguishable from a full suite run (ADVICE
     // r7): record the filter and rename the metric so a partial bench_out
-    // can never masquerade as the round artifact
+    // can never masquerade as the round artifact; it also skipped the
+    // above-bar retries and the requeue
     val onlyJson = only
-      .map(s => s.toSeq.sorted.map("\"" + _ + "\"").mkString(",\"only\":[", ",", "]"))
+      .map(s => s.toSeq.sorted.map("\"" + _ + "\"").mkString(",\"only\":[", ",", "]") + ",\"retries\":\"skipped\"")
       .getOrElse("")
     val metricName = if (only.isDefined) "partial_total" else "total"
     val requeueJson = requeued.toSeq

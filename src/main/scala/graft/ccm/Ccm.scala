@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
   * [[bidirectional]] and [[perSeries]]: ONE shuffle places each series in
   * one partition (repartition by series key), a sort within the partition
   * lays every series out as one run in time order, and a scan hands each
-  * run to the [[CcmLocal]] kernel — all further work is partition-local,
-  * with no pair-join materialization. The declarative [[CcmPipeline]]
-  * stays the relational form of the same operators (the oracle SQL
-  * mirrors it) and is reached through its own functions.
+  * run to the [[CcmKernel]] — all further work is partition-local, with
+  * no pair-join materialization. The kernel sorts each query's neighbours
+  * once per series (where that pays) and reuses them in every (lib size,
+  * sample) cell; it returns [[CcmLocal]]'s brute-force answer bit for
+  * bit. The declarative [[CcmPipeline]] stays the relational form of the
+  * same operators (the oracle SQL mirrors it) and is reached through its
+  * own functions.
   *
   * Input contract, checked by the scan and failing the job with an
   * `IllegalArgumentException` that names the series: the series key is
@@ -93,7 +96,9 @@ object Ccm {
     * `lib/ccm.ex:86-97`).
     *
     * @param maxPoints each series is materialized in ONE task's heap (two
-    *        doubles per point), so a runaway series would OOM the executor;
+    *        doubles per point, plus [[CcmKernel]]'s neighbour lists of up
+    *        to 24·[[CcmKernel.MaxNeighbours]] bytes per point), so a
+    *        runaway series would OOM the executor;
     *        series longer than this fail fast with a clear message instead.
     *        CCM cost is O(n^2) per series anyway — resample long series
     *        down rather than raising the cap.
@@ -112,7 +117,7 @@ object Ccm {
     * by skey at the session's shuffle width (an explicit count, so AQE
     * does not coalesce it — the same knob [[CcmPipeline.predictions]]
     * pins) → sort within partitions by (skey, order...) → scan each run of
-    * equal skey into two arrays → [[CcmLocal.bidirectional]].
+    * equal skey into two arrays → [[CcmKernel.bidirectional]].
     */
   private[ccm] def bySeries(
       in: DataFrame, order: Seq[String], spec: CcmSpec, libSizes: Option[Seq[Int]], maxPoints: Int
@@ -152,7 +157,7 @@ object Ccm {
           // no embedding point (fewer than (E-1)τ+1 points): no rows
           if (spec.maxLibSize(n) < 1) Nil
           else {
-            val res = CcmLocal.bidirectional(xs.result(), ys.result(), sp, key)
+            val res = CcmKernel.bidirectional(xs.result(), ys.result(), sp, key)
             def rows(d: CcmLocal.DirectionResult, name: String) = {
               val slope = CcmLocal.olsSlope(d.results)
               d.results.map { case (l, rho) => SkillRow(key, name, l, rho, slope, d.convergent) }
@@ -177,7 +182,7 @@ object Ccm {
       y: Seq[Double],
       spec: CcmSpec = CcmSpec()
   ): CcmLocal.BidirectionalResult =
-    CcmLocal.bidirectional(x.toArray, y.toArray, spec)
+    CcmKernel.bidirectional(x.toArray, y.toArray, spec)
 
   /** Parse the reference's livemd custom-data format (`examples.livemd:
     * 203-218`): two newline-separated, comma-separated float rows, equal

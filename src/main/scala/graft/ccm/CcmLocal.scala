@@ -5,13 +5,15 @@ package graft.ccm
   * library sampling ([[DetHash.rankHash]]) in place of the reference's
   * unseeded `Enum.take_random` (`lib/ccm.ex:117`).
   *
-  * Two roles:
-  *   1. the per-series kernel behind the distributed API
-  *      ([[Ccm.bidirectional]] and [[Ccm.perSeries]] run it over each
-  *      series' sorted run inside `mapPartitions`, so millions of
-  *      independent series compute locally after a single shuffle);
-  *   2. the executable spec that the DataFrame pipeline ([[CcmPipeline]])
-  *      and the DuckDB oracle SQL are tested against.
+  * The executable spec: brute force in every (lib size, sample) cell, as
+  * the reference. The production kernel ([[CcmKernel]], behind
+  * [[Ccm.bidirectional]], [[Ccm.perSeries]] and the other per-series
+  * callers) must equal it bit for bit, and the DataFrame pipeline
+  * ([[CcmPipeline]]), the DuckDB oracle SQL and the benchmark's result
+  * gate and traced `kernel.*` baseline are checked against it. Its
+  * primitive helpers (embedding, distance, weights, correlation, slope,
+  * buckets) are the ones [[CcmKernel]] calls, so the two share every
+  * formula and differ only in how they find the nearest neighbours.
   *
   * Degenerate paths all return 0.0/false, matching the reference exactly
   * (SURVEY.md §2d): lib_size >= n_points -> 0.0 (`ccm.ex:109-110`); < 2
@@ -50,9 +52,25 @@ object CcmLocal {
     * exp(-d_i / (minDist + 1e-8)); exact hits (d < 1e-12) get weight 1.0.
     */
   def weights(dists: Array[Double]): Array[Double] = {
-    if (dists.isEmpty) return Array.empty
-    val minDist = dists.min
-    dists.map(d => if (d < 1.0e-12) 1.0 else graft.functions.ExactMath.exp(-d / (minDist + 1.0e-8)))
+    val w = new Array[Double](dists.length)
+    weights(dists, dists.length, w)
+    w
+  }
+
+  /** [[weights]] of `dists(0 until k)` into `w`, allocation-free; the
+    * minimum is taken in Double's total order, as `dists.min` does.
+    */
+  def weights(dists: Array[Double], k: Int, w: Array[Double]): Unit = {
+    if (k == 0) return
+    var minDist = dists(0)
+    var i = 1
+    while (i < k) { if (java.lang.Double.compare(dists(i), minDist) < 0) minDist = dists(i); i += 1 }
+    i = 0
+    while (i < k) {
+      val d = dists(i)
+      w(i) = if (d < 1.0e-12) 1.0 else graft.functions.ExactMath.exp(-d / (minDist + 1.0e-8))
+      i += 1
+    }
   }
 
   /** Simplex-projection prediction for one query point
@@ -96,24 +114,33 @@ object CcmLocal {
     * ~1e-34 and a rho of ~1e-17 instead of 0.0.
     */
   def correlation(pairs: Seq[(Double, Double)]): Double = {
-    if (pairs.length < 2) return 0.0
-    val n = pairs.length
-    val aMean = pairs.iterator.map(_._1).sum / n
-    val pMean = pairs.iterator.map(_._2).sum / n
-    val a0 = pairs.head._1
-    val p0 = pairs.head._2
+    val actual = pairs.iterator.map(_._1).toArray
+    val predicted = pairs.iterator.map(_._2).toArray
+    correlation(actual, predicted, actual.length)
+  }
+
+  /** [[correlation]] of the pairs (actual(i), predicted(i)), i < n. */
+  def correlation(actual: Array[Double], predicted: Array[Double], n: Int): Double = {
+    if (n < 2) return 0.0
+    var aSum = 0.0; var pSum = 0.0
+    var i = 0
+    while (i < n) { aSum += actual(i); pSum += predicted(i); i += 1 }
+    val aMean = aSum / n
+    val pMean = pSum / n
+    val a0 = actual(0)
+    val p0 = predicted(0)
     var num = 0.0; var aVar = 0.0; var pVar = 0.0
     var aVaries = false; var pVaries = false
-    val it = pairs.iterator
-    while (it.hasNext) {
-      val ap = it.next()
-      val a = ap._1
-      val p = ap._2
+    i = 0
+    while (i < n) {
+      val a = actual(i)
+      val p = predicted(i)
       num += (a - aMean) * (p - pMean)
       aVar += (a - aMean) * (a - aMean)
       pVar += (p - pMean) * (p - pMean)
       aVaries |= a != a0
       pVaries |= p != p0
+      i += 1
     }
     val denom = math.sqrt(aVar * pVar)
     if (aVaries && pVaries && denom != 0.0) num / denom else 0.0
@@ -231,7 +258,7 @@ object CcmLocal {
     * E = 1 collapses the second axis to constant 0 (always-true match),
     * mirroring the declarative lit(0L) column.
     */
-  private def gridBuckets(embedding: Array[Array[Double]], spec: CcmSpec): Buckets =
+  private[ccm] def gridBuckets(embedding: Array[Array[Double]], spec: CcmSpec): Buckets =
     if (spec.knnBuckets <= 0 ||
         embedding.length < spec.knnAutoFactor.toLong * spec.knnBuckets) null
     else {

@@ -15,9 +15,12 @@ package graft.ccm
   * approximate candidate path — each embedding row is grid-bucketed along
   * `e0` AND `e{E-1}` (a compound two-axis key; one axis when E = 1) into
   * `knnBuckets` per-series buckets per axis and the kNN join probes only
-  * the query's bucket ±1 on each axis. Both execution forms honour it
-  * with bit-identical buckets: the [[CcmLocal]] kernel behind the [[Ccm]]
-  * API and the declarative [[CcmPipeline.predictions]].
+  * the query's bucket ±1 on each axis. Every execution form honours it
+  * with bit-identical buckets: the [[CcmKernel]] behind the [[Ccm]] API
+  * (which applies the box to each query's neighbour list or library
+  * scan), its
+  * brute-force spec [[CcmLocal]], and the declarative
+  * [[CcmPipeline.predictions]].
   * Deterministic (bucket edges derive from per-series min/max, not RNG),
   * so still oracle-checkable; candidate count per query point drops from
   * the whole library to the ~(3/knnBuckets)² fraction within one bucket
@@ -66,7 +69,7 @@ package graft.ccm
   *
   * `reuseDistances` and `fusedTopK` shape the declarative pair join
   * ([[CcmPipeline.predictions]] / [[CcmPipeline.skill]]) only; the
-  * [[Ccm]] API's kernel ignores them. ReuseDistancesSpec and FusedKnnSpec
+  * [[Ccm]] API's [[CcmKernel]] ignores them. ReuseDistancesSpec and FusedKnnSpec
   * are the standing proof that each reproduces the default path.
   *
   * `consecutive` (README-parity mode): the reference's README describes

@@ -381,7 +381,7 @@ object Streams {
           state.update(CcmWindowState(ords, xs, ys))
           if (xs.length < minPoints) Iterator.empty
           else {
-            val res = graft.ccm.CcmLocal.bidirectional(xs.toArray, ys.toArray, spec, skey)
+            val res = graft.ccm.CcmKernel.bidirectional(xs.toArray, ys.toArray, spec, skey)
             def meanRho(d: graft.ccm.CcmLocal.DirectionResult) =
               if (d.results.isEmpty) 0.0 else d.results.map(_._2).sum / d.results.length
             Iterator.single(

@@ -1,6 +1,11 @@
 package graft.ccm
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.SparkTestBase
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -215,5 +220,37 @@ class CcmPipelineSpec extends SparkTestBase {
       val shortRows = g.count(_.head == 3L)
       assert(shortRows == (if (e == 1) 4 else 0), s"E=$e τ=$tau: short series gave $shortRows rows")
     }
+  }
+
+  test("one Ccm.bidirectional call on a 100-point pair runs at most 2 jobs and 2 stages") {
+    // a ratchet on the one-shuffle plan: lower the bounds when a change
+    // lowers the counts; raising them needs a stated reason
+    val (xs, ys) = Generators.coupledLogisticMaps(100, 0.3)
+    val df = xs.indices.map(i => (1L, i.toLong, xs(i), ys(i))).toDF("skey", "ord", "x", "y")
+    val sc = spark.sparkContext
+    val group = "ccm-counter-ratchet"
+    val jobs = new AtomicInteger
+    val stageIds = ConcurrentHashMap.newKeySet[Int]()
+    val stages = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stageIds.add)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stageIds.contains(e.stageInfo.stageId)) stages.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one Ccm.bidirectional call", interruptOnCancel = false)
+      val rows =
+        try Ccm.bidirectional(df, $"skey", Seq("ord"), $"x", $"y", CcmSpec(), CcmSpec.libSizeLadder(98)).collect()
+        finally sc.clearJobGroup()
+      TestBus.drain(sc)
+      assert(rows.length == 2 * CcmSpec.libSizeLadder(98).size)
+      assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
+      assert(stages.get >= 1 && stages.get <= 2, s"${stages.get} stages")
+    } finally sc.removeSparkListener(listener)
   }
 }
