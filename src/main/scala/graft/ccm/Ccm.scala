@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
   * one partition (repartition by series key), a sort within the partition
   * lays every series out as one run in time order, and a scan hands each
   * run to the [[CcmKernel]] — all further work is partition-local, with
-  * no pair-join materialization. The kernel sorts each query's neighbours
-  * once per series (where that pays) and reuses them in every (lib size,
-  * sample) cell; it returns [[CcmLocal]]'s brute-force answer bit for
-  * bit. The declarative [[CcmPipeline]] stays the relational form of the
-  * same operators (the oracle SQL mirrors it) and is reached through its
-  * own functions.
+  * no pair-join materialization. Within each sample the kernel grows one
+  * library per query across the ascending lib sizes, so each distance is
+  * computed once per sample rather than once per (lib size, sample) cell;
+  * it returns [[CcmLocal]]'s brute-force answer bit for bit. The
+  * declarative [[CcmPipeline]] stays the relational form of the same
+  * operators (the oracle SQL mirrors it) and is reached through its own
+  * functions.
   *
   * Input contract, checked by the scan and failing the job with an
   * `IllegalArgumentException` that names the series: the series key is
@@ -96,9 +97,8 @@ object Ccm {
     * `lib/ccm.ex:86-97`).
     *
     * @param maxPoints each series is materialized in ONE task's heap (two
-    *        doubles per point, plus [[CcmKernel]]'s neighbour lists of up
-    *        to 24·[[CcmKernel.MaxNeighbours]] bytes per point), so a
-    *        runaway series would OOM the executor;
+    *        doubles per point, plus [[CcmKernel]]'s embeddings and
+    *        linear scratch), so a runaway series would OOM the executor;
     *        series longer than this fail fast with a clear message instead.
     *        CCM cost is O(n^2) per series anyway — resample long series
     *        down rather than raising the cap.

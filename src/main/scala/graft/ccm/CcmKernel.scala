@@ -5,37 +5,27 @@ package graft.ccm
   * [[CcmLocal.bidirectional]], bit for bit, without its boxed per-cell
   * sort.
   *
-  * A distance depends only on the point pair, so the k nearest library
-  * members of a query are the first k entries of the query's neighbour
-  * list — all other embedding rows sorted once by (distance, index), the
-  * order [[CcmLocal.predictPoint]] sorts by — that fall inside the
-  * library. Per series the kernel therefore
-  *   - sorts every query's neighbours once per direction;
-  *   - builds each sample's rank order once, shared by both directions and
-  *     every lib size (the identity order in `consecutive` mode);
-  *   - answers each (lib size, sample) cell by walking the prediction set
-  *     in rank order and scanning each query's list for its first k rows
-  *     of rank < L (and, in bucketed mode, inside the query's ±1 box).
+  * Within one sample the libraries of the lib-size ladder are nested: the
+  * library of size L is the L lowest ranks, and a query of rung L (rank
+  * >= L) is a query of every smaller rung too. So the kernel walks each
+  * sample's rungs by ascending L and keeps, per query, its nearest rows
+  * of the library so far, sorted by (distance, index) — the order
+  * [[CcmLocal.predictPoint]] sorts by. Moving from rung L' to rung L adds
+  * only the rows of rank L' until L to each remaining query's nearest
+  * rows (in bucketed mode, only those inside the query's ±1 box), so one
+  * sample costs about n²/2 distances per direction instead of the
+  * Σ L·(n-L) of a fresh scan per cell. Per series the kernel also builds
+  * each sample's rank order once, shared by both directions and every
+  * rung (the identity order in `consecutive` mode).
+  *
   * Weights, correlation, the per-rung mean over the samples (summed in
   * sample order), the slope and the convergence test are [[CcmLocal]]'s
   * own functions, so every double is produced by the same operations in
-  * the same order.
-  *
-  * The lists cost ~n²·log2(n) steps to build, so a series whose cells
-  * need fewer distances than that in all (few samples, small libraries
-  * on a long series) skips them ([[listsPay]]): each query then scans its
-  * library directly, keeping the k nearest with the same comparator.
-  *
-  * A list keeps at most [[MaxNeighbours]] rows (about 12 bytes each), so
-  * memory is ~12·n·min(n-1, MaxNeighbours) bytes per direction. A query
-  * whose kept prefix holds fewer matching rows than it needs scans its
-  * library instead; at n <= MaxNeighbours + 1 embedding rows the lists
-  * are complete.
+  * the same order. Memory is linear in the series: beside the two
+  * embeddings, about (12·(E+1) + 20)·n bytes of scratch shared by both
+  * directions.
   */
 object CcmKernel {
-
-  /** Neighbour-list length cap per query. */
-  private[ccm] val MaxNeighbours = 512
 
   /** Same contract and result as [[CcmLocal.bidirectional]]. */
   def bidirectional(
@@ -43,34 +33,21 @@ object CcmKernel {
       y: Array[Double],
       spec: CcmSpec = CcmSpec(),
       seriesKey: Long = 0L
-  ): CcmLocal.BidirectionalResult =
-    run(x, y, spec, seriesKey, listsPay(spec.maxLibSize(x.length), spec.resolvedLibSizes(x.length), spec.numSamples))
-
-  /** Whether building the neighbour lists of `n` embedding rows (~n²·log2 n
-    * steps) costs less than the library scans they replace: one distance
-    * per (query, library row) in every cell.
-    */
-  private[ccm] def listsPay(n: Int, libs: Seq[Int], samples: Int): Boolean = {
-    val scans = libs.iterator.filter(l => l > 0 && l < n - 1).map(l => l.toLong * (n - l)).sum * samples
-    n.toLong * n * (32 - Integer.numberOfLeadingZeros(n)) < scans
-  }
-
-  /** [[bidirectional]] with the neighbour lists on or off. */
-  private[ccm] def run(
-      x: Array[Double],
-      y: Array[Double],
-      spec: CcmSpec,
-      seriesKey: Long,
-      lists: Boolean
   ): CcmLocal.BidirectionalResult = {
     require(x.length == y.length, "x_series and y_series must have the same length")
+    val scratch = new Scratch(math.max(spec.maxLibSize(x.length), 0), spec.embeddingDim + 1)
     // x_causes_y embeds Y and predicts X (`lib/ccm.ex:49-53`)
-    val dirs = Array(new Direction(y, x, spec, lists), new Direction(x, y, spec, lists))
-    val libs = spec.resolvedLibSizes(x.length)
-    val n = dirs(0).n
+    val dirs = Array(new Direction(y, x, spec, scratch), new Direction(x, y, spec, scratch))
+    val ladder = spec.resolvedLibSizes(x.length)
+    val libs = ladder.toArray
+    val n = scratch.n
+    // rungs with a cell to compute, by ascending lib size; lib_size >= n,
+    // < 2 prediction points and an empty library (every prediction 0.0,
+    // or no pair at all) all give 0.0
+    val rungs = libs.indices.filter(li => libs(li) > 0 && n - libs(li) >= 2).sortBy(libs(_)).toArray
     val sums = Array.ofDim[Double](dirs.length, libs.length)
+    val rho = new Array[Double](libs.length)
     val order = Array.range(0, n)
-    val rank = Array.range(0, n)
     val keys = new Array[Long](n)
     var s = 1
     while (s <= spec.numSamples) {
@@ -80,81 +57,108 @@ object CcmKernel {
         while (i < n) { keys(i) = (DetHash.rankHash(i.toLong, s.toLong, seriesKey, spec.seed) << 32) | i; i += 1 }
         java.util.Arrays.sort(keys)
         i = 0
-        while (i < n) { order(i) = keys(i).toInt; rank(order(i)) = i; i += 1 }
+        while (i < n) { order(i) = keys(i).toInt; i += 1 }
       }
-      for (d <- dirs.indices; (l, li) <- libs.zipWithIndex) sums(d)(li) += dirs(d).cell(l, order, rank)
+      var d = 0
+      while (d < dirs.length) {
+        dirs(d).sample(libs, rungs, order, rho)
+        var li = 0
+        while (li < libs.length) { sums(d)(li) += rho(li); li += 1 }
+        d += 1
+      }
       s += 1
     }
     def result(d: Int) = {
-      val results = libs.zipWithIndex.map { case (l, li) => (l, sums(d)(li) / spec.numSamples) }
+      val results = ladder.zipWithIndex.map { case (l, li) => (l, sums(d)(li) / spec.numSamples) }
       CcmLocal.DirectionResult(results, CcmLocal.convergent(results))
     }
     CcmLocal.BidirectionalResult(xCausesY = result(0), yCausesX = result(1))
   }
 
-  /** One direction of one series: the embedding of `source`, the aligned
-    * `target`, the grid buckets and, with `lists`, every query's sorted
-    * neighbour list.
+  /** Per-sample working arrays for `n` embedding rows, `k` = E+1 nearest
+    * rows per query; both directions use them in turn.
     */
-  private final class Direction(source: Array[Double], target: Array[Double], spec: CcmSpec, lists: Boolean) {
-    private val e = spec.embeddingDim
-    private val embedding = CcmLocal.embed(source, e, spec.tau)
-    private val adjusted = target.drop((e - 1) * spec.tau) // alignment, `ccm.ex:119`
-    private val buckets = CcmLocal.gridBuckets(embedding, spec)
-    val n: Int = embedding.length
-    private val width = if (lists) math.max(math.min(n - 1, MaxNeighbours), 0) else 0
-    private val complete = lists && width == n - 1
-    // query q's list is nbIdx/nbDist(q * width until (q + 1) * width)
-    private val nbIdx = new Array[Int](n * width)
-    private val nbDist = new Array[Double](n * width)
-    // per-cell scratch: the (actual, predicted) pairs and one query's
-    // nearest rows with their weights
-    private val actual = new Array[Double](n)
-    private val predicted = new Array[Double](n)
-    private val kd = new Array[Double](e + 1)
-    private val kp = new Array[Int](e + 1)
-    private val kw = new Array[Double](e + 1)
+  private final class Scratch(val n: Int, val k: Int) {
+    // query q's nearest library rows so far: kd/kp(q * k until q * k + found(q))
+    val kd = new Array[Double](n * k)
+    val kp = new Array[Int](n * k)
+    val found = new Array[Int](n)
+    // one cell's (actual, predicted) pairs, one prediction's distances and weights
+    val actual = new Array[Double](n)
+    val predicted = new Array[Double](n)
+    val dists = new Array[Double](k)
+    val w = new Array[Double](k)
+  }
 
-    if (width > 0) {
-      val dist = new Array[Double](n)
-      val idx = new Array[Int](n)
-      val tmp = new Array[Int](n)
-      var q = 0
-      while (q < n) {
-        var m = 0
-        var p = 0
-        while (p < n) {
-          if (p != q) { dist(p) = CcmLocal.euclidean(embedding(q), embedding(p)); idx(m) = p; m += 1 }
-          p += 1
+  /** One direction of one series: the embedding of `source`, the aligned
+    * `target` and the grid buckets.
+    */
+  private final class Direction(source: Array[Double], target: Array[Double], spec: CcmSpec, s: Scratch) {
+    private val embedding = CcmLocal.embed(source, spec.embeddingDim, spec.tau)
+    private val adjusted = target.drop((spec.embeddingDim - 1) * spec.tau) // alignment, `ccm.ex:119`
+    private val buckets = CcmLocal.gridBuckets(embedding, spec)
+    private val n = embedding.length
+
+    /** [[CcmLocal.crossMapSample]] for every lib size of one sample's rank
+      * `order` into `rho` (0.0 for the rungs outside `rungs`).
+      */
+    def sample(libs: Array[Int], rungs: Array[Int], order: Array[Int], rho: Array[Double]): Unit = {
+      java.util.Arrays.fill(rho, 0.0)
+      java.util.Arrays.fill(s.found, 0)
+      var prev = 0
+      var r = 0
+      while (r < rungs.length) {
+        val l = libs(rungs(r))
+        var pairs = 0
+        var j = l
+        while (j < n) {
+          val q = order(j)
+          extend(q, order, prev, l)
+          // exact: min(E+1, L) rows; bucketed: up to E+1 of the box's rows,
+          // and a query with none contributes no pair
+          val c = s.found(q)
+          if (c > 0) {
+            s.actual(pairs) = adjusted(q)
+            s.predicted(pairs) = predict(q, c)
+            pairs += 1
+          }
+          j += 1
         }
-        sortByDistance(idx, m, dist, tmp)
-        var t = 0
-        while (t < width) { nbIdx(q * width + t) = idx(t); nbDist(q * width + t) = dist(idx(t)); t += 1 }
-        q += 1
+        rho(rungs(r)) = CcmLocal.correlation(s.actual, s.predicted, pairs)
+        prev = l
+        r += 1
       }
     }
 
-    /** [[CcmLocal.crossMapSample]] for the library of the `l` lowest ranks. */
-    def cell(l: Int, order: Array[Int], rank: Array[Int]): Double = {
-      // lib_size >= n, < 2 prediction points, or an empty library (every
-      // prediction 0.0, or no pair at all): all give 0.0
-      if (l >= n || l <= 0 || n - l < 2) return 0.0
-      // exact: k = min(E+1, L); bucketed: up to E+1 of the box's rows
-      val need = if (buckets == null) math.min(e + 1, l) else e + 1
-      var pairs = 0
-      var j = l
-      while (j < n) {
-        val q = order(j)
-        val k = nearest(q, l, order, rank, need)
-        // bucketed: a query with no candidate contributes no pair
-        if (k > 0) {
-          actual(pairs) = adjusted(q)
-          predicted(pairs) = predict(k)
-          pairs += 1
+    /** Merge the library rows `order(from until until)` into query q's
+      * nearest rows, keeping the first k in (distance, index) order.
+      */
+    private def extend(q: Int, order: Array[Int], from: Int, until: Int): Unit = {
+      val k = s.k
+      val base = q * k
+      val eq = embedding(q)
+      var found = s.found(q)
+      var j = from
+      while (j < until) {
+        val p = order(j)
+        if (inBox(q, p)) {
+          val d = CcmLocal.euclidean(eq, embedding(p))
+          var at = found
+          while (at > 0 && {
+                   val c = java.lang.Double.compare(d, s.kd(base + at - 1))
+                   c < 0 || (c == 0 && p < s.kp(base + at - 1))
+                 }) at -= 1
+          if (at < k) {
+            var t = math.min(found, k - 1)
+            while (t > at) { s.kd(base + t) = s.kd(base + t - 1); s.kp(base + t) = s.kp(base + t - 1); t -= 1 }
+            s.kd(base + at) = d
+            s.kp(base + at) = p
+            if (found < k) found += 1
+          }
         }
         j += 1
       }
-      CcmLocal.correlation(actual, predicted, pairs)
+      s.found(q) = found
     }
 
     /** Whether row p is in query q's ±1 box (always, unbucketed). */
@@ -167,91 +171,23 @@ object CcmKernel {
         b1 >= qb1 - 1 && b1 <= qb1 + 1 && b2 >= qb2 - 1 && b2 <= qb2 + 1
       }
 
-    /** Query q's nearest `need` library rows into kd/kp in (distance,
-      * index) order; returns how many it found (fewer only when the
-      * library, or the box, holds fewer).
+    /** [[CcmLocal.predictPoint]]'s weighted average over query q's first
+      * `c` nearest rows.
       */
-    private def nearest(q: Int, l: Int, order: Array[Int], rank: Array[Int], need: Int): Int = {
-      var found = 0
-      var t = q * width
-      val end = t + width
-      while (t < end && found < need) {
-        val p = nbIdx(t)
-        if (rank(p) < l && inBox(q, p)) { kd(found) = nbDist(t); kp(found) = p; found += 1 }
-        t += 1
-      }
-      if (found == need || complete) found else scanLibrary(q, l, order, need)
-    }
-
-    /** The same selection by a scan of the library, `order(0 until l)`. */
-    private def scanLibrary(q: Int, l: Int, order: Array[Int], need: Int): Int = {
-      var found = 0
-      var j = 0
-      while (j < l) {
-        val p = order(j)
-        if (inBox(q, p)) {
-          val d = CcmLocal.euclidean(embedding(q), embedding(p))
-          var at = found
-          while (at > 0 && {
-                   val c = java.lang.Double.compare(d, kd(at - 1))
-                   c < 0 || (c == 0 && p < kp(at - 1))
-                 }) at -= 1
-          if (at < need) {
-            var t = math.min(found, need - 1)
-            while (t > at) { kd(t) = kd(t - 1); kp(t) = kp(t - 1); t -= 1 }
-            kd(at) = d
-            kp(at) = p
-            if (found < need) found += 1
-          }
-        }
-        j += 1
-      }
-      found
-    }
-
-    /** [[CcmLocal.predictPoint]]'s weighted average over kd/kp(0 until k). */
-    private def predict(k: Int): Double = {
-      CcmLocal.weights(kd, k, kw)
-      var totalW = kw(0) // `w.sum` reduces from the first weight
+    private def predict(q: Int, c: Int): Double = {
+      val base = q * s.k
+      System.arraycopy(s.kd, base, s.dists, 0, c)
+      CcmLocal.weights(s.dists, c, s.w)
+      var totalW = s.w(0) // `w.sum` reduces from the first weight
       var i = 1
-      while (i < k) { totalW += kw(i); i += 1 }
+      while (i < c) { totalW += s.w(i); i += 1 }
       if (totalW == 0.0) 0.0
       else {
         var num = 0.0
         i = 0
-        while (i < k) { num += adjusted(kp(i)) * kw(i); i += 1 }
+        while (i < c) { num += adjusted(s.kp(base + i)) * s.w(i); i += 1 }
         num / totalW
       }
     }
-  }
-
-  /** Stable bottom-up merge sort of `idx(0 until m)` by `dist(idx(_))`
-    * under Double's total order; `idx` arrives ascending, so ties stay in
-    * index order — [[CcmLocal.predictPoint]]'s (distance, index) order.
-    */
-  private def sortByDistance(idx: Array[Int], m: Int, dist: Array[Double], tmp: Array[Int]): Unit = {
-    var src = idx
-    var dst = tmp
-    var run = 1
-    while (run < m) {
-      var lo = 0
-      while (lo < m) {
-        val mid = math.min(lo + run, m)
-        val hi = math.min(lo + 2 * run, m)
-        var i = lo
-        var j = mid
-        var o = lo
-        while (o < hi) {
-          if (j >= hi || (i < mid && java.lang.Double.compare(dist(src(i)), dist(src(j))) <= 0)) {
-            dst(o) = src(i); i += 1
-          } else { dst(o) = src(j); j += 1 }
-          o += 1
-        }
-        lo = hi
-      }
-      val t = src; src = dst; dst = t
-      run *= 2
-    }
-    if (src ne idx) System.arraycopy(src, 0, idx, 0, m)
   }
 }

@@ -17,9 +17,8 @@ package graft.ccm
   * `knnBuckets` per-series buckets per axis and the kNN join probes only
   * the query's bucket ±1 on each axis. Every execution form honours it
   * with bit-identical buckets: the [[CcmKernel]] behind the [[Ccm]] API
-  * (which applies the box to each query's neighbour list or library
-  * scan), its
-  * brute-force spec [[CcmLocal]], and the declarative
+  * (which skips the rows outside each query's box as it grows the
+  * query's library), its brute-force spec [[CcmLocal]], and the declarative
   * [[CcmPipeline.predictions]].
   * Deterministic (bucket edges derive from per-series min/max, not RNG),
   * so still oracle-checkable; candidate count per query point drops from

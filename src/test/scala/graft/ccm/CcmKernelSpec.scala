@@ -20,13 +20,9 @@ object CcmKernelSpec extends Properties("graft.ccm.CcmKernel") {
     dir("x_causes_y", a.xCausesY, b.xCausesY) && dir("y_causes_x", a.yCausesX, b.yCausesX)
   }
 
-  /** The kernel, with the neighbour lists and without, equals the spec. */
-  private def agrees(x: Array[Double], y: Array[Double], spec: CcmSpec, key: Long): Prop = {
-    val want = CcmLocal.bidirectional(x, y, spec, key)
-    (sameBits(CcmKernel.run(x, y, spec, key, lists = true), want) :| "lists" &&
-      sameBits(CcmKernel.run(x, y, spec, key, lists = false), want) :| "library scan") :|
+  private def agrees(x: Array[Double], y: Array[Double], spec: CcmSpec, key: Long): Prop =
+    sameBits(CcmKernel.bidirectional(x, y, spec, key), CcmLocal.bidirectional(x, y, spec, key)) :|
       s"spec=$spec key=$key x=${x.mkString(",")} y=${y.mkString(",")}"
-  }
 
   /** Coupled logistic maps, optionally quantised to 0.1 (distance ties) or
     * with runs of repeated points (exact hits, the weight-1.0 path).
@@ -84,27 +80,11 @@ object CcmKernelSpec extends Properties("graft.ccm.CcmKernel") {
     agrees(x, y, spec, key)
   }
 
-  property("equals CcmLocal bit for bit past the neighbour-list cap") = {
-    val rows = CcmKernel.MaxNeighbours + 48
-    val (x, y) = Generators.coupledSeries(rows + 2, Generators.CoupledParams(coupling = 0.2))
-    val spec = CcmSpec(numSamples = 2, libSizes = Some(Seq(0, 1, 2, 40, rows - 1, rows)))
-    // the 2-row library of sample 1 lies past some query's kept prefix, so
-    // that cell falls back to scanning the library
-    val emb = CcmLocal.embed(y, spec.embeddingDim, spec.tau)
-    val order = emb.indices.sortBy(i => (DetHash.rankHash(i.toLong, 1L, 3L, spec.seed), i))
-    val (lib, pred) = order.splitAt(2)
-    def key(q: Int, p: Int) = (CcmLocal.euclidean(emb(q), emb(p)), p)
-    val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int)
-    val fallback = pred.exists { q =>
-      val nearest = lib.map(key(q, _)).max(ord)
-      emb.indices.count(p => p != q && ord.lt(key(q, p), nearest)) >= CcmKernel.MaxNeighbours
-    }
-    (emb.length == rows) :| "rows" && fallback :| "the small rung must force the library scan" &&
-      agrees(x, y, spec, 3L) && agrees(x, y, spec.copy(knnBuckets = 8, knnAutoFactor = 0), 3L)
+  property("equals CcmLocal bit for bit on a long series with several samples") = {
+    // an auto ladder of 19 rungs over 598 rows, each sample walking its
+    // rungs through one growing library per query
+    val (x, y) = Generators.coupledSeries(600, Generators.CoupledParams(coupling = 0.2))
+    val spec = CcmSpec(numSamples = 2)
+    agrees(x, y, spec, 3L) && agrees(x, y, spec.copy(knnBuckets = 8, knnAutoFactor = 0), 3L)
   }
-
-  property("the lists are built only where they cost less than the scans") =
-    CcmKernel.listsPay(98, CcmSpec.libSizeLadder(98), 100) && // a default pair
-      !CcmKernel.listsPay(648, Seq(150, 300, 600), 1) && // a long series, one sample
-      !CcmKernel.listsPay(0, Seq(1), 100) && !CcmKernel.listsPay(5, Seq(10), 100)
 }
