@@ -1,6 +1,6 @@
 package graft.ccm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** User-facing CCM API mirroring the reference's three entry points
@@ -23,11 +23,11 @@ import org.apache.spark.sql.functions._
   * Input contract, checked by the scan and failing the job with an
   * `IllegalArgumentException` that names the series: the series key is
   * never null, x and y are never null or NaN, and the order columns are
-  * unique within a series (a tied
-  * order would make the result depend on physical row order). A series
-  * with fewer than (E-1)τ+1 points has no embedding point and yields no
-  * rows; a constant series yields rho 0.0 (the zero-variance rule,
-  * `lib/ccm.ex:212`).
+  * unique within a series as the sort compares them, so two NaN orders
+  * tie (a tied order would make the result depend on physical row
+  * order). A series with fewer than (E-1)τ+1 points has no embedding
+  * point and yields no rows; a constant series yields rho 0.0 (the
+  * zero-variance rule, `lib/ccm.ex:212`).
   */
 object Ccm {
 
@@ -67,6 +67,8 @@ object Ccm {
     df.select(Seq(skey.cast("long").as("skey"), x.as("x"), y.as("y")) ++ order.map(col): _*)
 
   private val DefaultMaxPoints = 1 << 20
+
+  private val skillRowEncoder: Encoder[SkillRow] = Encoders.product[SkillRow]
 
   /** Bidirectional CCM over a wide DataFrame of many series.
     *
@@ -123,7 +125,6 @@ object Ccm {
       in: DataFrame, order: Seq[String], spec: CcmSpec, libSizes: Option[Seq[Int]], maxPoints: Int
   ): Dataset[SkillRow] = {
     val spark = in.sparkSession
-    import spark.implicits._
     val width = 3 + order.size
     val sp = libSizes.fold(spec)(ls => spec.copy(libSizes = Some(ls)))
     in.repartition(spark.sessionState.conf.numShufflePartitions, col("skey"))
@@ -147,7 +148,7 @@ object Ccm {
               )
             xs += finite(r, 1, "x", key)
             ys += finite(r, 2, "y", key)
-            if (prev != null && (3 until width).forall(i => prev.get(i) == r.get(i)))
+            if (prev != null && (3 until width).forall(i => sameOrder(prev.get(i), r.get(i))))
               throw new IllegalArgumentException(
                 s"series $key repeats the order value ${(3 until width).map(r.get).mkString("(", ", ", ")")}; " +
                   "the order columns must be unique within a series"
@@ -165,7 +166,17 @@ object Ccm {
             rows(res.xCausesY, DirXCausesY) ++ rows(res.yCausesX, DirYCausesX)
           }
         }
-      }
+      }(skillRowEncoder)
+  }
+
+  /** Whether two order values sort as equal: the sort's own equality for
+    * floating values (Spark's `SQLOrderingUtil`), under which NaN ties
+    * NaN and -0.0 ties 0.0; plain equality otherwise.
+    */
+  private def sameOrder(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Double, y: Double) => x == y || java.lang.Double.compare(x, y) == 0
+    case (x: Float, y: Float)   => x == y || java.lang.Float.compare(x, y) == 0
+    case _                      => a == b
   }
 
   private def finite(r: Row, i: Int, name: String, key: Long): Double = {

@@ -18,11 +18,20 @@ package graft.ccm
   * each sample's rank order once, shared by both directions and every
   * rung (the identity order in `consecutive` mode).
   *
+  * A prediction depends only on the query's nearest rows and the fixed
+  * aligned target, so the kernel keeps each query's last prediction and
+  * recomputes it only when a merge has written into those rows since
+  * (a closer row, or an equal-distance row of lower index): about half
+  * the predictions of a default call reuse the previous rung's value.
+  * Each sample and direction starts every query with no nearest rows, so
+  * its first prediction there always follows a write and is computed
+  * afresh.
+  *
   * Weights, correlation, the per-rung mean over the samples (summed in
   * sample order), the slope and the convergence test are [[CcmLocal]]'s
   * own functions, so every double is produced by the same operations in
   * the same order. Memory is linear in the series: beside the two
-  * embeddings, about (12·(E+1) + 20)·n bytes of scratch shared by both
+  * embeddings, about (12·(E+1) + 29)·n bytes of scratch shared by both
   * directions.
   */
 object CcmKernel {
@@ -83,6 +92,9 @@ object CcmKernel {
     val kd = new Array[Double](n * k)
     val kp = new Array[Int](n * k)
     val found = new Array[Int](n)
+    // query q's last prediction, and whether its nearest rows changed since
+    val pred = new Array[Double](n)
+    val stale = new Array[Boolean](n)
     // one cell's (actual, predicted) pairs, one prediction's distances and weights
     val actual = new Array[Double](n)
     val predicted = new Array[Double](n)
@@ -118,8 +130,9 @@ object CcmKernel {
           // and a query with none contributes no pair
           val c = s.found(q)
           if (c > 0) {
+            if (s.stale(q)) { s.pred(q) = predict(q, c); s.stale(q) = false }
             s.actual(pairs) = adjusted(q)
-            s.predicted(pairs) = predict(q, c)
+            s.predicted(pairs) = s.pred(q)
             pairs += 1
           }
           j += 1
@@ -131,7 +144,8 @@ object CcmKernel {
     }
 
     /** Merge the library rows `order(from until until)` into query q's
-      * nearest rows, keeping the first k in (distance, index) order.
+      * nearest rows, keeping the first k in (distance, index) order, and
+      * mark q's prediction stale when they change.
       */
     private def extend(q: Int, order: Array[Int], from: Int, until: Int): Unit = {
       val k = s.k
@@ -154,6 +168,7 @@ object CcmKernel {
             s.kd(base + at) = d
             s.kp(base + at) = p
             if (found < k) found += 1
+            s.stale(q) = true
           }
         }
         j += 1

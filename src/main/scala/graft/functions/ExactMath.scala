@@ -14,9 +14,13 @@ package graft.functions
   *   (b) JVM-side twins that must stay bit-identical to the SQL
   *       pipelines ([[graft.ccm.FusedKnn]], [[graft.ccm.CcmLocal]]).
   *
-  * EVERY operation below mirrors the SQL texts' order exactly —
-  * `ExactSeriesSpec` pins bit-equality of all three emissions on a
-  * dense grid. Change one emission and you must change all three.
+  * Every emission computes the same VALUE by the same tree: the range
+  * reduction and the Taylor fold below mirror the SQL texts' operations
+  * in order, and [[exp]] forms the 2^k scale directly from its exponent
+  * bits where the texts' square-and-multiply ladder provably yields that
+  * same power of two (see [[exp]]). `ExactSeriesSpec` enforces
+  * bit-equality of all three emissions on a dense grid and at the edges
+  * of that shortcut. Change one emission and you must change all three.
   */
 object ExactMath {
 
@@ -55,6 +59,11 @@ object ExactMath {
     *   3. 2^k by square-and-multiply over k's 11 bits (powers of two are
     *      exact down to the subnormal floor; underflow to 0 is
     *      deterministic IEEE on every engine).
+    * For -1022 <= k <= 1023, step 3 builds 2^k from its exponent bits
+    * instead: every partial product of the ladder is then a normal power
+    * of two, so the ladder computes 2^k exactly and the one multiply
+    * `s * 2^k` sees the same operands. Outside that range (results at
+    * the subnormal end) the ladder runs as in the SQL texts.
     */
   def exp(x: Double): Double = {
     if (x < -745.0) return 0.0
@@ -70,14 +79,14 @@ object ExactMath {
       p = pj
       j += 1
     }
+    if (kk >= -1022.0 && kk <= 1023.0) return s * java.lang.Double.longBitsToDouble((kk.toLong + 1023L) << 52)
     var b = if (kk < 0.0) 0.5 else 2.0
     var res = 1.0
     var m = if (kk < 0.0) -kk else kk
     var i = 1
     // early exit on m == 0 is VALUE-identical to the SQL texts' fixed 11
     // rounds: once no bits remain, res never changes again and the
-    // remaining b squarings feed nothing. Typical kernel args (|x| < 44,
-    // |k| < 64) exhaust after 6 rounds; ExactSeriesSpec's dense grid
+    // remaining b squarings feed nothing. ExactSeriesSpec's dense grid
     // pins bit-equality against the fixed-length HOF fold.
     while (i <= 11 && m > 0.0) {
       val h = math.floor(m * 0.5)

@@ -3,7 +3,7 @@ package graft.ccm
 import java.lang.Double.doubleToRawLongBits
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAll, forAllNoShrink, propBoolean}
 
 /** Differential spec: the production [[CcmKernel]] against the brute-force
   * [[CcmLocal]] it replaces. Every rho must carry the same raw bits, every
@@ -73,11 +73,38 @@ object CcmKernelSpec extends Properties("graft.ccm.CcmKernel") {
     key <- Gen.choose(-5L, 5L)
   } yield (x, y, spec, key)
 
+  /** Quantised coupled series of 40-120 points over the dense ladder
+    * 1..n at 2-3 samples: a query's nearest rows change at most rungs,
+    * often through a distance tie broken by index, so every reuse of a
+    * memoised prediction is checked against a fresh brute force. Not
+    * shrunk: each case costs a brute force over every rung, and a shrunk
+    * series would no longer be quantised.
+    */
+  private val memoCaseGen = for {
+    n <- Gen.choose(40, 120)
+    coupling <- Gen.choose(0.0, 0.4)
+    seed <- Gen.choose(0L, 10000L)
+    e <- Gen.oneOf(1, 2, 3)
+    samples <- Gen.choose(2, 3)
+    specSeed <- Gen.choose(0L, 1000L)
+    key <- Gen.choose(-5L, 5L)
+  } yield {
+    val (x, y) = Generators.coupledSeries(n, Generators.CoupledParams(coupling = coupling, seed = seed))
+    def quantised(s: Array[Double]) = s.map(v => math.round(v * 10) / 10.0)
+    val spec = CcmSpec(embeddingDim = e, libSizes = Some(1 to n), numSamples = samples, seed = specSeed)
+    (quantised(x), quantised(y), spec, key)
+  }
+
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(500)
 
   property("equals CcmLocal bit for bit on small series") = forAll(caseGen) { case (x, y, spec, key) =>
     agrees(x, y, spec, key)
+  }
+
+  property("equals CcmLocal bit for bit when nearest rows change at most rungs") = forAllNoShrink(memoCaseGen) {
+    case (x, y, spec, key) =>
+      agrees(x, y, spec, key) && agrees(x, y, spec.copy(knnBuckets = 3, knnAutoFactor = 0), key)
   }
 
   property("equals CcmLocal bit for bit on a long series with several samples") = {

@@ -106,14 +106,17 @@ class CcmPipelineSpec extends SparkTestBase {
 
   /** Each API fails with an IllegalArgumentException whose message holds `text`. */
   private def assertRejected(df: DataFrame, text: String): Unit =
-    bothApis(df).foreach { run =>
-      val err = intercept[Exception](run())
-      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
-      assert(
-        chain.exists(t => t.isInstanceOf[IllegalArgumentException] && t.getMessage.contains(text)),
-        err.getMessage
-      )
-    }
+    bothApis(df).foreach(assertFails(_, text))
+
+  /** `run` fails with an IllegalArgumentException whose message holds `text`. */
+  private def assertFails(run: () => Seq[Row], text: String): Unit = {
+    val err = intercept[Exception](run())
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(
+      chain.exists(t => t.isInstanceOf[IllegalArgumentException] && t.getMessage.contains(text)),
+      err.getMessage
+    )
+  }
 
   test("a null or NaN x or y at t=100 fails both APIs, naming the series") {
     for (c <- Seq("x", "y"); bad <- Seq(lit(null).cast("double"), lit(Double.NaN)))
@@ -122,6 +125,10 @@ class CcmPipelineSpec extends SparkTestBase {
 
   test("a tied order value fails both APIs, naming the series") {
     assertRejected(pair(9L).withColumn("ord", when($"ord" === 101L, 100L).otherwise($"ord")), "series 9 ")
+    // a double order with NaN at t = 10 and t = 20: the sort places the
+    // two NaNs side by side as equal (perSeries casts ord to long)
+    val nanTied = pair(9L).withColumn("ord", when($"ord".isin(10L, 20L), Double.NaN).otherwise($"ord".cast("double")))
+    assertFails(bothApis(nanTied).head, "series 9 ")
   }
 
   test("a null series key fails both APIs") {
