@@ -16,11 +16,11 @@ package graft.functions
   *
   * Every emission computes the same VALUE by the same tree: the range
   * reduction and the Taylor fold below mirror the SQL texts' operations
-  * in order, and [[exp]] forms the 2^k scale directly from its exponent
-  * bits where the texts' square-and-multiply ladder provably yields that
-  * same power of two (see [[exp]]). `ExactSeriesSpec` enforces
-  * bit-equality of all three emissions on a dense grid and at the edges
-  * of that shortcut. Change one emission and you must change all three.
+  * in order, and [[exp]] builds the 2^k scale from its bits, equal to
+  * what the texts' square-and-multiply ladder yields for every k it can
+  * reach (see [[exp]]). `ExactSeriesSpec` enforces bit-equality of all
+  * three emissions on a dense grid and at the subnormal edge of 2^k.
+  * Change one emission and you must change all three.
   */
 object ExactMath {
 
@@ -50,20 +50,19 @@ object ExactMath {
   )
 
   /** exp(x) for x in [-745, 709]; below -745 returns 0.0 (true exp is
-    * denormal there; the clamp keeps the 2^k scale inside the 11-bit
-    * binary-exponentiation ladder). Identical op order to
+    * denormal there), above 709 +Infinity. Same value as
     * `ExactExp.spark`/`ExactExp.duck`:
     *   1. k = floor(x/ln2 + 0.5) (floor is exactly defined, not libm);
     *      r = x - k*ln2, |r| <= ln2/2 + eps.
-    *   2. exp(r) by 13-term Taylor (truncation < 5e-18 at |r|=0.347).
-    *   3. 2^k by square-and-multiply over k's 11 bits (powers of two are
-    *      exact down to the subnormal floor; underflow to 0 is
-    *      deterministic IEEE on every engine).
-    * For -1022 <= k <= 1023, step 3 builds 2^k from its exponent bits
-    * instead: every partial product of the ladder is then a normal power
-    * of two, so the ladder computes 2^k exactly and the one multiply
-    * `s * 2^k` sees the same operands. Outside that range (results at
-    * the subnormal end) the ladder runs as in the SQL texts.
+    *   2. exp(r) by 13-term Taylor (truncation < 5e-18 at |r|=0.347),
+    *      the texts' fold in order.
+    *   3. s * 2^k, with 2^k built from its bits. The clamps bound k to
+    *      [-1075, 1023]; for every such k the texts' square-and-multiply
+    *      ladder yields exactly 2^k (each partial product is a power of
+    *      two between 1 and 2^k, and 2^k is a normal or subnormal double
+    *      for k >= -1074), and for k = -1075 it yields 0 (2^-1075 rounds
+    *      half-even to zero). The bits below give those same values, so
+    *      the one multiply `s * 2^k` sees the texts' operands.
     */
   def exp(x: Double): Double = {
     if (x < -745.0) return 0.0
@@ -79,23 +78,10 @@ object ExactMath {
       p = pj
       j += 1
     }
-    if (kk >= -1022.0 && kk <= 1023.0) return s * java.lang.Double.longBitsToDouble((kk.toLong + 1023L) << 52)
-    var b = if (kk < 0.0) 0.5 else 2.0
-    var res = 1.0
-    var m = if (kk < 0.0) -kk else kk
-    var i = 1
-    // early exit on m == 0 is VALUE-identical to the SQL texts' fixed 11
-    // rounds: once no bits remain, res never changes again and the
-    // remaining b squarings feed nothing. ExactSeriesSpec's dense grid
-    // pins bit-equality against the fixed-length HOF fold.
-    while (i <= 11 && m > 0.0) {
-      val h = math.floor(m * 0.5)
-      if (m - 2.0 * h >= 1.0) res = res * b
-      b = b * b
-      m = h
-      i += 1
-    }
-    s * res
+    if (kk < -1074.0) 0.0
+    else s * java.lang.Double.longBitsToDouble(
+      if (kk >= -1022.0) (kk.toLong + 1023L) << 52 else 1L << (kk.toLong + 1074L)
+    )
   }
 
   /** ln(y) for y in (2^-40, 2^40), y > 0 — the JVM emission of

