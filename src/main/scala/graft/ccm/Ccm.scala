@@ -1,7 +1,8 @@
 package graft.ccm
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** User-facing CCM API mirroring the reference's three entry points
   * (`CCM.new/3`, `CCM.cross_map/2`, `CCM.bidirectional_ccm/1`,
@@ -9,10 +10,15 @@ import org.apache.spark.sql.functions._
   *
   * One execution strategy serves both distributed entry points,
   * [[bidirectional]] and [[perSeries]]: ONE shuffle places each series in
-  * one partition (repartition by series key), a sort within the partition
-  * lays every series out as one run in time order, and a scan hands each
-  * run to the [[CcmKernel]] — all further work is partition-local, with
-  * no pair-join materialization. Within each sample the kernel grows one
+  * one partition (repartition by series key), the task gathers its
+  * partition's points into primitive buffers reserved from the task's
+  * memory manager (about 68 bytes a point for one long order column, see
+  * [[PartitionPoints]]), orders each series with Spark's own ordering of
+  * the order columns, and hands each series to the [[CcmKernel]] — all
+  * further work is partition-local, with no pair-join materialization.
+  * The buffers cannot spill: a partition that does not fit in the task's
+  * execution memory fails with an `IllegalStateException` naming the
+  * remedy, more shuffle partitions. Within each sample the kernel grows one
   * library per query across the ascending lib sizes, so each distance is
   * computed once per sample rather than once per (lib size, sample) cell;
   * it returns [[CcmLocal]]'s brute-force answer bit for bit. The
@@ -23,11 +29,11 @@ import org.apache.spark.sql.functions._
   * Input contract, checked by the scan and failing the job with an
   * `IllegalArgumentException` that names the series: the series key is
   * never null, x and y are never null or NaN, and the order columns are
-  * unique within a series as the sort compares them, so two NaN orders
-  * tie (a tied order would make the result depend on physical row
-  * order). A series with fewer than (E-1)τ+1 points has no embedding
-  * point and yields no rows; a constant series yields rho 0.0 (the
-  * zero-variance rule, `lib/ccm.ex:212`).
+  * unique within a series as Spark's ordering compares them, so two NaN
+  * orders tie, as do -0.0 and 0.0 and two nulls (a tied order would make
+  * the result depend on physical row order). A series with fewer than
+  * (E-1)τ+1 points has no embedding point and yields no rows; a constant
+  * series yields rho 0.0 (the zero-variance rule, `lib/ccm.ex:212`).
   */
 object Ccm {
 
@@ -98,12 +104,12 @@ object Ccm {
     * optional ladder (default: each series' own auto-ladder,
     * `lib/ccm.ex:86-97`).
     *
-    * @param maxPoints each series is materialized in ONE task's heap (two
-    *        doubles per point, plus [[CcmKernel]]'s embeddings and
-    *        linear scratch), so a runaway series would OOM the executor;
-    *        series longer than this fail fast with a clear message instead.
-    *        CCM cost is O(n^2) per series anyway — resample long series
-    *        down rather than raising the cap.
+    * @param maxPoints each series is held whole in ONE task: its points sit
+    *        in the task's reserved buffers with the rest of the partition
+    *        (68 bytes a point), and [[CcmKernel]] adds its embeddings and
+    *        linear scratch on the heap, so series longer than this fail
+    *        with a clear message. CCM cost is O(n^2) per series anyway —
+    *        resample long series down rather than raising the cap.
     */
   def perSeries(
       df: DataFrame,
@@ -118,47 +124,36 @@ object Ccm {
   /** The one runner, over [[wide]]'s shape with x, y double: repartition
     * by skey at the session's shuffle width (an explicit count, so AQE
     * does not coalesce it — the same knob [[CcmPipeline.predictions]]
-    * pins) → sort within partitions by (skey, order...) → scan each run of
-    * equal skey into two arrays → [[CcmKernel.bidirectional]].
+    * pins) → gather the partition into [[PartitionPoints]] and order it by
+    * (skey, order...) → check each series ([[checkSeries]], `maxPoints`)
+    * and hand it to [[CcmKernel.bidirectional]], in ascending key order.
+    * A task holds its whole partition, reserved from its memory manager
+    * and reported as its peak execution memory; one that does not fit
+    * fails (raise the shuffle width).
     */
   private[ccm] def bySeries(
       in: DataFrame, order: Seq[String], spec: CcmSpec, libSizes: Option[Seq[Int]], maxPoints: Int
   ): Dataset[SkillRow] = {
     val spark = in.sparkSession
-    val width = 3 + order.size
+    val orderSchema = StructType(in.schema.fields.drop(3))
     val sp = libSizes.fold(spec)(ls => spec.copy(libSizes = Some(ls)))
     in.repartition(spark.sessionState.conf.numShufflePartitions, col("skey"))
-      .sortWithinPartitions((col("skey") +: order.map(col)): _*)
       .mapPartitions { rows =>
-        val it = rows.buffered
-        Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
-          // nulls sort first, so a null key always starts a run
-          if (it.head.isNullAt(0)) throw new IllegalArgumentException("null series key")
-          val key = it.head.getLong(0)
-          val xs = new scala.collection.mutable.ArrayBuilder.ofDouble
-          val ys = new scala.collection.mutable.ArrayBuilder.ofDouble
-          var n = 0
-          var prev: Row = null
-          while (it.hasNext && it.head.getLong(0) == key) {
-            val r = it.next()
-            n += 1
-            if (n > maxPoints)
-              throw new IllegalArgumentException(
-                s"series $key exceeds maxPoints=$maxPoints; resample it or raise the cap (each series is held in one task)"
-              )
-            xs += finite(r, 1, "x", key)
-            ys += finite(r, 2, "y", key)
-            if (prev != null && (3 until width).forall(i => sameOrder(prev.get(i), r.get(i))))
-              throw new IllegalArgumentException(
-                s"series $key repeats the order value ${(3 until width).map(r.get).mkString("(", ", ", ")")}; " +
-                  "the order columns must be unique within a series"
-              )
-            prev = r
-          }
+        val pts = new PartitionPoints(orderSchema)
+        rows.foreach(pts.add)
+        pts.series().flatMap { case (key, at) =>
+          val n = at.length
+          if (n > maxPoints)
+            throw new IllegalArgumentException(
+              s"series $key exceeds maxPoints=$maxPoints; resample it or raise the cap (each series is held in one task)"
+            )
+          val xs = at.map(pts.x)
+          val ys = at.map(pts.y)
+          checkSeries(key, xs, ys, j => if (pts.compareOrder(at(j - 1), at(j)) == 0) Some(pts.orderText(at(j))) else None)
           // no embedding point (fewer than (E-1)τ+1 points): no rows
           if (spec.maxLibSize(n) < 1) Nil
           else {
-            val res = CcmKernel.bidirectional(xs.result(), ys.result(), sp, key)
+            val res = CcmKernel.bidirectional(xs, ys, sp, key)
             def rows(d: CcmLocal.DirectionResult, name: String) = {
               val slope = CcmLocal.olsSlope(d.results)
               d.results.map { case (l, rho) => SkillRow(key, name, l, rho, slope, d.convergent) }
@@ -169,20 +164,28 @@ object Ccm {
       }(skillRowEncoder)
   }
 
-  /** Whether two order values sort as equal: the sort's own equality for
-    * floating values (Spark's `SQLOrderingUtil`), under which NaN ties
-    * NaN and -0.0 ties 0.0; plain equality otherwise.
+  /** The per-series input contract over a series laid out in order, as
+    * every CCM entry point checks it: x and y are never NaN (a null is
+    * read as NaN), and no point repeats its predecessor's order value.
+    * `repeats(i)`, asked for i ≥ 1, gives point i's order value as text
+    * when it ties point i-1's. Fails with an `IllegalArgumentException`
+    * that names the series.
     */
-  private def sameOrder(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Double, y: Double) => x == y || java.lang.Double.compare(x, y) == 0
-    case (x: Float, y: Float)   => x == y || java.lang.Float.compare(x, y) == 0
-    case _                      => a == b
-  }
-
-  private def finite(r: Row, i: Int, name: String, key: Long): Double = {
-    val v = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
-    if (v.isNaN) throw new IllegalArgumentException(s"series $key has a null or NaN $name value")
-    v
+  private[graft] def checkSeries(
+      key: Long, xs: Array[Double], ys: Array[Double], repeats: Int => Option[String]
+  ): Unit = {
+    require(xs.length == ys.length, "x_series and y_series must have the same length")
+    var i = 0
+    while (i < xs.length) {
+      if (xs(i).isNaN) throw new IllegalArgumentException(s"series $key has a null or NaN x value")
+      if (ys(i).isNaN) throw new IllegalArgumentException(s"series $key has a null or NaN y value")
+      if (i > 0) repeats(i).foreach { v =>
+        throw new IllegalArgumentException(
+          s"series $key repeats the order value $v; the order columns must be unique within a series"
+        )
+      }
+      i += 1
+    }
   }
 
   /** Single-pair convenience mirroring `CCM.bidirectional_ccm/1` exactly:
@@ -192,8 +195,12 @@ object Ccm {
       x: Seq[Double],
       y: Seq[Double],
       spec: CcmSpec = CcmSpec()
-  ): CcmLocal.BidirectionalResult =
-    CcmKernel.bidirectional(x.toArray, y.toArray, spec)
+  ): CcmLocal.BidirectionalResult = {
+    val (xs, ys) = (x.toArray, y.toArray)
+    // the points are in order by position, so none repeats an order value
+    checkSeries(0L, xs, ys, _ => None)
+    CcmKernel.bidirectional(xs, ys, spec)
+  }
 
   /** Parse the reference's livemd custom-data format (`examples.livemd:
     * 203-218`): two newline-separated, comma-separated float rows, equal

@@ -338,7 +338,9 @@ object Streams {
   // event-time axis to expire against. This operator therefore assumes a
   // BOUNDED series-key space (total state = |keys| x window points); for an
   // unbounded key universe, attach a real event-time column and expire
-  // state the way `rollingLagCorrelation` does.
+  // state the way `rollingLagCorrelation` does. Input contract as in the
+  // batch API: an `ord` repeated within a series (in one micro-batch or
+  // across them) or a NaN x or y fails the query, naming the series.
   // -------------------------------------------------------------------
 
   /** One series point on the stream. */
@@ -372,12 +374,15 @@ object Streams {
           // re-sort the WHOLE buffer by ord: a late point arriving in a
           // later micro-batch must take its temporal position — the CCM
           // kernel treats array position as time
-          val merged = (prev.ords.lazyZip(prev.xs).lazyZip(prev.ys).toVector ++ incoming)
-            .sortBy(_._1)
-            .takeRight(window)
-          val ords = merged.map(_._1)
-          val xs = merged.map(_._2)
-          val ys = merged.map(_._3)
+          val merged = (prev.ords.lazyZip(prev.xs).lazyZip(prev.ys).toVector ++ incoming).sortBy(_._1)
+          // the batch API's contract, so a repeated ord or a NaN fails the
+          // query naming the series rather than reaching the kernel
+          graft.ccm.Ccm.checkSeries(skey, merged.map(_._2).toArray, merged.map(_._3).toArray,
+            i => if (merged(i)._1 == merged(i - 1)._1) Some(s"(${merged(i)._1})") else None)
+          val kept = merged.takeRight(window)
+          val ords = kept.map(_._1)
+          val xs = kept.map(_._2)
+          val ys = kept.map(_._3)
           state.update(CcmWindowState(ords, xs, ys))
           if (xs.length < minPoints) Iterator.empty
           else {

@@ -1,11 +1,11 @@
 package graft.ccm
 
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import graft.SparkTestBase
 import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -123,6 +123,14 @@ class CcmPipelineSpec extends SparkTestBase {
       assertRejected(pair(7L).withColumn(c, when($"ord" === 100L, bad).otherwise(col(c))), "series 7 ")
   }
 
+  test("bidirectionalLocal rejects a NaN x or y") {
+    val (xs, ys) = Generators.coupledLogisticMaps(60, 0.3)
+    for ((x, y, c) <- Seq((xs.updated(30, Double.NaN), ys, "x"), (xs, ys.updated(30, Double.NaN), "y"))) {
+      val err = intercept[IllegalArgumentException](Ccm.bidirectionalLocal(x.toSeq, y.toSeq, spec))
+      assert(err.getMessage.contains(s"has a null or NaN $c value"), err.getMessage)
+    }
+  }
+
   test("a tied order value fails both APIs, naming the series") {
     assertRejected(pair(9L).withColumn("ord", when($"ord" === 101L, 100L).otherwise($"ord")), "series 9 ")
     // a double order with NaN at t = 10 and t = 20: the sort places the
@@ -231,7 +239,9 @@ class CcmPipelineSpec extends SparkTestBase {
 
   test("one Ccm.bidirectional call on a 100-point pair runs at most 2 jobs and 2 stages") {
     // a ratchet on the one-shuffle plan: lower the bounds when a change
-    // lowers the counts; raising them needs a stated reason
+    // lowers the counts; raising them needs a stated reason. The memory
+    // bound keeps a task from holding a sorter page (32 MiB) again: the
+    // runner reserves only its points and reports them as its peak
     val (xs, ys) = Generators.coupledLogisticMaps(100, 0.3)
     val df = xs.indices.map(i => (1L, i.toLong, xs(i), ys(i))).toDF("skey", "ord", "x", "y")
     val sc = spark.sparkContext
@@ -239,6 +249,7 @@ class CcmPipelineSpec extends SparkTestBase {
     val jobs = new AtomicInteger
     val stageIds = ConcurrentHashMap.newKeySet[Int]()
     val stages = new AtomicInteger
+    val peakMem = new AtomicLong
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
@@ -247,6 +258,9 @@ class CcmPipelineSpec extends SparkTestBase {
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (stageIds.contains(e.stageInfo.stageId)) stages.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stageIds.contains(e.stageId) && e.taskMetrics != null)
+          peakMem.accumulateAndGet(e.taskMetrics.peakExecutionMemory, (a, b) => math.max(a, b))
     }
     sc.addSparkListener(listener)
     try {
@@ -258,6 +272,7 @@ class CcmPipelineSpec extends SparkTestBase {
       assert(rows.length == 2 * CcmSpec.libSizeLadder(98).size)
       assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
       assert(stages.get >= 1 && stages.get <= 2, s"${stages.get} stages")
+      assert(peakMem.get > 0 && peakMem.get <= 1000000L, s"max task peak execution memory ${peakMem.get} bytes")
     } finally sc.removeSparkListener(listener)
   }
 }

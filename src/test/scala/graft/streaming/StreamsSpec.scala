@@ -267,6 +267,45 @@ class StreamsSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  /** Runs `batches` through streamingCcm; the query must fail with an
+    * IllegalArgumentException whose message holds `text`.
+    */
+  private def assertCcmStreamFails(name: String, batches: Seq[Seq[Streams.SeriesPoint]], text: String): Unit = {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Streams.SeriesPoint]
+    val q = Streams
+      .streamingCcm(input.toDS(), window = 50, minPoints = 40, spec = graft.ccm.CcmSpec(numSamples = 2))
+      .writeStream.format("memory").queryName(name).outputMode(OutputMode.Append()).start()
+    try {
+      val err = intercept[Exception] {
+        batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      }
+      val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(
+        chain.exists(t => t.isInstanceOf[IllegalArgumentException] && t.getMessage.contains(text)),
+        err.getMessage
+      )
+    } finally q.stop()
+  }
+
+  private def points(skey: Long, ords: Range): Seq[Streams.SeriesPoint] = {
+    val (xs, ys) = graft.ccm.Generators.coupledLogisticMaps(60, 0.3)
+    ords.map(i => Streams.SeriesPoint(skey, i.toLong, xs(i), ys(i)))
+  }
+
+  test("streamingCcm fails the query on an ord repeated across micro-batches, naming the series") {
+    // ord 10 arrives again in the second batch, with other values
+    val again = points(4L, 10 to 10).map(_.copy(x = 0.5))
+    assertCcmStreamFails("ccm_dup", Seq(points(4L, 0 until 30), again ++ points(4L, 30 until 50)), "series 4 repeats")
+  }
+
+  test("streamingCcm fails the query on a NaN y, naming the series") {
+    val batch = points(6L, 0 until 50).map(p => if (p.ord == 20L) p.copy(y = Double.NaN) else p)
+    assertCcmStreamFails("ccm_nan", Seq(batch), "series 6 has a null or NaN y value")
+  }
+
   test("streamingSessionize closes sessions on gap timeout and intra-batch gaps") {
     val spark2 = spark
     import spark2.implicits._
